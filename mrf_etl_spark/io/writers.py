@@ -17,6 +17,8 @@ append-unique/upsert + `os.replace` atomic publish (prod_etl/ETL_1.py:
   * atomic_overwrite — write to a temp dir, swap into place. Preserves the
     reference's crash-safety on local/posix storage; on object stores the
     job-commit protocol / table format transaction takes this role.
+  * write_star_tables — run the independent table writes of one batch on
+    concurrent driver threads, so Spark overlaps their small jobs.
 
 Scale note: the anti-join reads ONLY the key columns of the existing table
 (Catalyst prunes), so cost is O(new + existing-keys), not O(existing-bytes).
@@ -33,10 +35,15 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.util import inheritable_thread_target
+
+from mrf_etl_spark import schemas
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -271,6 +278,46 @@ def latest_merge(
             .drop("_rn", "_src")
         )
         atomic_overwrite(deduped, path)
+
+
+def write_star_tables(
+    spark: SparkSession,
+    lake_dir: str,
+    writes: dict[str, Callable[[str], None]],
+) -> dict[str, int]:
+    """Run each ``writes[name](f"{lake_dir}/{name}")`` and then count that
+    table's rows, every table on its own driver thread; returns the counts
+    in ``writes`` order.
+
+    A batch's star-table writes are independent (own path, own
+    :func:`table_lock`) and each is a chain of 1-3-task jobs plus
+    driver-side planning and commit, so run one after another they leave
+    the cores mostly idle; on concurrent threads Spark's scheduler
+    overlaps them. Each target is wrapped by ``inheritable_thread_target``
+    in the caller's thread, once per table, so every thread gets its own
+    copy of the caller's local properties (job group, description) and
+    the session's job tags.
+
+    The count reads with the table's declared schema
+    (``schemas.STAR_TABLES``): a count reads no columns, so the Parquet
+    schema-inference job would be wasted.
+
+    Every write runs to completion even if a sibling fails; the first
+    failure (in ``writes`` order) is re-raised after all have finished.
+    Siblings that succeeded stay committed — each table write is
+    idempotent, so re-running the batch repairs the lake."""
+
+    def write_and_count(name: str, write: Callable[[str], None]) -> int:
+        path = f"{lake_dir}/{name}"
+        write(path)
+        return spark.read.schema(schemas.STAR_TABLES[name]).parquet(path).count()
+
+    with ThreadPoolExecutor(max_workers=len(writes), thread_name_prefix="star-write") as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write_and_count), name, write)
+            for name, write in writes.items()
+        }
+    return {name: f.result() for name, f in futures.items()}
 
 
 def write_partitioned(

@@ -21,11 +21,16 @@ Scale design:
     100 TB that 5-level layout explodes into ~10^6 small partitions, so we
     keep the 3 pruning-relevant levels and leave class/type to row-group
     statistics (min/max pushdown covers them).
+  * the eight tables of a batch are written concurrently, one driver
+    thread each (io.write_star_tables), so their small jobs overlap. A
+    failed table write re-raises after the others finish; those stay
+    committed, and re-running the batch (idempotent) repairs the lake.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +45,13 @@ from mrf_etl_spark.functions import (
     slugify,
     year_month_from_string,
 )
-from mrf_etl_spark.io import append_unique, conform, upsert_by_key, write_partitioned
+from mrf_etl_spark.io import (
+    append_unique,
+    conform,
+    upsert_by_key,
+    write_partitioned,
+    write_star_tables,
+)
 
 
 @dataclass
@@ -210,34 +221,29 @@ def ingest_batch(
     tables = project_dims(base)
     tables.update(project_xrefs(providers_raw, cfg))
 
-    for name, df in tables.items():
-        append_unique(spark, df, f"{lake_dir}/{name}", keys=schemas.TABLE_KEYS[name])
-
+    writes = {
+        name: partial(append_unique, spark, df, keys=schemas.TABLE_KEYS[name])
+        for name, df in tables.items()
+    }
     fact = build_fact(base, cfg)
-    fact_path = f"{lake_dir}/fact_rate"
     if partitioned_fact:
         # dynamic-partition variant (notebook.py:275-351): replace only the
         # partitions present in this batch, dedup inside each on fact_uid
-        existing_filterable = fact  # batch is already the new partition set
-        write_partitioned(
-            existing_filterable,
-            fact_path,
+        writes["fact_rate"] = partial(
+            write_partitioned,
+            fact,
             partition_by=cfg.fact_partition_cols,
             dedup_keys=["fact_uid"],
         )
     else:
-        upsert_by_key(
+        writes["fact_rate"] = partial(
+            upsert_by_key,
             spark,
             fact,
-            fact_path,
             keys=["fact_uid"],
             existing_filter=(F.col("state") == cfg.state),
         )
-
-    counts = {}
-    for name in [*tables.keys(), "fact_rate"]:
-        counts[name] = spark.read.parquet(f"{lake_dir}/{name}").count()
-    return counts
+    return write_star_tables(spark, lake_dir, writes)
 
 
 def ingest_npi_dims(

@@ -195,3 +195,73 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     after = spark.read.parquet(path)
     assert after.count() == 10_000
     assert after.agg(F.sum("v")).collect()[0][0] == src.agg(F.sum("v")).collect()[0][0]
+
+
+def test_table_writes_inherit_caller_job_group(spark, lake):
+    """Every job of ingest_batch's concurrent table writes carries the
+    caller's job group (local properties reach the write threads), and
+    the thread wrapping raises no 'Tags will not be inherited' warning."""
+    import time
+    import warnings
+
+    d, counts1, rates, prov = lake
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe(group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        deadline = time.monotonic() + 30
+        while not (ids := tracker.getJobIdsForGroup(group)) and time.monotonic() < deadline:
+            time.sleep(0.05)  # the status store is fed asynchronously
+        return ids
+
+    try:
+        first = max(probe("ingest-before")) + 1
+        sc.setJobGroup("ingest-under-test", "ingest-under-test")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert ingest_batch(spark, rates, prov, d, IngestConfig(state="GA")) == counts1
+        last = min(probe("ingest-after")) - 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    jobs = set(tracker.getJobIdsForGroup("ingest-under-test"))
+    assert jobs and jobs == set(range(first, last + 1))
+
+
+def test_failed_table_write_reraises_after_siblings_finish(spark, lake, monkeypatch):
+    """One table's write fails: ingest_batch re-raises it only after the
+    sibling writes have finished (no lock dir or thread outlives the
+    call), and a clean re-run into the same lake repairs it to the counts
+    of a fresh run."""
+    import glob
+    import threading
+
+    import mrf_etl_spark.plans.ingest as ingest_mod
+
+    _, counts1, rates, prov = lake
+    real = ingest_mod.append_unique
+
+    def failing(spark, df, path, **kw):
+        if path.endswith("/dim_payer"):
+            raise RuntimeError("dim_payer write failed")
+        return real(spark, df, path, **kw)
+
+    d = tempfile.mkdtemp(prefix="mrf_lake_fail_")
+    try:
+        threads_before = set(threading.enumerate())
+        monkeypatch.setattr(ingest_mod, "append_unique", failing)
+        with pytest.raises(RuntimeError, match="dim_payer write failed"):
+            ingest_batch(spark, rates, prov, d, IngestConfig(state="GA"))
+        monkeypatch.undo()
+        assert glob.glob(f"{d}/*.lock") == []
+        assert set(threading.enumerate()) <= threads_before
+        assert glob.glob(f"{d}/dim_payer*") == []
+        # the siblings committed before the failure surfaced
+        assert spark.read.parquet(f"{d}/fact_rate").count() == counts1["fact_rate"]
+        assert ingest_batch(spark, rates, prov, d, IngestConfig(state="GA")) == counts1
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
