@@ -265,13 +265,14 @@ def main() -> None:
     all_runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     rows: dict[str, int] = {}
 
-    from mrf_etl_spark.operators.dedup import release_state
+    from mrf_etl_spark import state
 
     def time_one(name: str) -> None:
         fn = reg_queries.get(name)
         if fn is None:
             errors[name] = "not registered in queries()"
             return
+        before = state.held(spark)
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -284,11 +285,17 @@ def main() -> None:
             errors[name] = str(e).splitlines()[0][:300] if str(e) else repr(e)
             print(f"# {name} ERROR {e}", file=sys.stderr)
             return
-        all_runs[name].append(time.perf_counter() - t0)
-        # release any operator-held cache AFTER the timing: a leaked
-        # persist (d2/d3b hold their per-doc state) degrades every
-        # subsequent query's memory budget
-        release_state(df)
+        elapsed = time.perf_counter() - t0
+        # release operator-held state AFTER the timing. State that
+        # survives the release would turn the next sweep's run into a
+        # CacheManager hit, so a leak is an error, not a fast timing.
+        state.release_state()
+        cache, rdds = state.leaked(before, state.held(spark))
+        if cache or rdds:
+            errors[name] = f"LEAK: {cache} cached plans, {rdds} persisted RDDs"
+            print(f"# {name} {errors[name]}", file=sys.stderr)
+            return
+        all_runs[name].append(elapsed)
 
     # Three timed executions per query, report the fastest. The FIRST run
     # of a plan shape pays JVM JIT + janino codegen (measured 2-4x the
@@ -318,7 +325,7 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — a control error is not a bench error
                 continue
             control_runs[cname].append(time.perf_counter() - t0)
-            release_state(cdf)
+            state.release_state()
 
     for sweep in range(3):
         if not subset:

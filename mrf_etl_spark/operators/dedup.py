@@ -30,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mrf_etl_spark import state
+from mrf_etl_spark.state import release_state  # noqa: F401 (re-export)
+
 # ------------------------------------------------------------------ exact
 
 
@@ -192,8 +195,7 @@ def ngram_jaccard_pairs_capped(
 
     Works in the engine-neutral 60-bit md5 hash domain (like
     minhash_lsh_pairs), so the SQL oracle replays it verbatim. Returns
-    (doc_a, doc_b, n_common, size_a, size_b, <metric>); call
-    release_state(result) in long-lived sessions.
+    (doc_a, doc_b, n_common, size_a, size_b, <metric>).
 
     ``metric="containment"`` scores c/least(|A|,|B|) instead — the
     asymmetric-size form (Lee et al. ACL'22) that surfaces a short doc
@@ -210,10 +212,10 @@ def ngram_jaccard_pairs_capped(
     # AND verification — the d2 fused-state design.
     sh = doc_shingles(df, text_col, id_col, k)
     hashed = sh.select("doc_id", shingle_hash_expr(F.col("shingle")).alias("h"))
-    per_doc = (
+    per_doc = state.persist(
         hashed.groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hset"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.collect_set("h").alias("hset")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     # Posting-list pair generation, NOT an inverted-index self-join: ONE
     # groupBy-h shuffle builds the per-shingle posting list (df-capped, so
@@ -310,7 +312,7 @@ def ngram_jaccard_pairs_capped(
     # the same order as the result itself; a corpus whose surviving pair
     # list outgrows broadcast should shard the verify by doc_a range
     # instead (each slice still beats shuffling hash sets).
-    out = (
+    return (
         F.broadcast(pruned)
         .join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -319,8 +321,6 @@ def ngram_jaccard_pairs_capped(
         .filter(F.col(metric) >= threshold)
         .select("doc_a", "doc_b", "n_common", "size_a", "size_b", metric)
     )
-    out._mrf_persisted = per_doc
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -513,8 +513,9 @@ def dedup_incremental(
     be persisted by the caller first or its aggregation runs twice."""
     from pyspark.storagelevel import StorageLevel
 
-    bstate = per_doc_signature_state(batch, text_col, id_col, k, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
+    bstate = state.persist(
+        per_doc_signature_state(batch, text_col, id_col, k, num_hashes),
+        StorageLevel.MEMORY_AND_DISK,
     )
     bband = lsh_band_hashes(bstate, num_hashes, bands).withColumnRenamed(
         "doc_id", "bdoc"
@@ -540,7 +541,7 @@ def dedup_incremental(
         .groupBy("bdoc")
         .agg(F.min("cdoc").alias("match_id"))
     )
-    out = (
+    return (
         batch.select(F.col(id_col).alias("doc_id"))
         .join(matches, F.col("doc_id") == F.col("bdoc"), "left")
         .select(
@@ -549,8 +550,6 @@ def dedup_incremental(
             "match_id",
         )
     )
-    out._mrf_persisted = bstate
-    return out
 
 
 def minhash_lsh_pairs(
@@ -580,8 +579,9 @@ def minhash_lsh_pairs(
     construction and collisions would have to collide on both sides alike."""
     from pyspark.storagelevel import StorageLevel
 
-    per_doc = per_doc_signature_state(df, text_col, id_col, k, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
+    per_doc = state.persist(
+        per_doc_signature_state(df, text_col, id_col, k, num_hashes),
+        StorageLevel.MEMORY_AND_DISK,
     )
     bandh = lsh_band_hashes(per_doc, num_hashes, bands)
     a = bandh.alias("a")
@@ -603,7 +603,7 @@ def minhash_lsh_pairs(
     sa = per_doc.select(F.col("doc_id").alias("doc_a"), F.col("hset").alias("set_a"))
     sb = per_doc.select(F.col("doc_id").alias("doc_b"), F.col("hset").alias("set_b"))
     n_common = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    out = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("n_common", n_common)
@@ -615,46 +615,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    # the persisted per-doc state must outlive this call (the returned plan
-    # references it lazily), so it cannot be unpersisted here. Hand the
-    # handle to the caller instead: long-lived sessions running repeated
-    # dedups should call release_state(result) once the result is
-    # materialized, or cached partitions accumulate until eviction.
-    out._mrf_persisted = per_doc
-    return out
-
-
-def release_state(result: DataFrame) -> None:
-    """Unpersist intermediate state an operator attached to its result
-    (e.g. minhash_lsh_pairs' per-doc signature table). Safe to call on any
-    DataFrame; no-op when nothing is attached. Call only after the result
-    has been materialized (collected/written) — the plan reads the cache."""
-    for attr in ("_mrf_persisted", "_mrf_persisted_labels"):
-        handle = getattr(result, attr, None)
-        if handle is not None:
-            handle.unpersist()
-    for handle in getattr(result, "_mrf_persisted_all", ()) or ():
-        handle.unpersist()
-
-
-def carry_state(dst: DataFrame, *srcs: DataFrame, hold: tuple = ()) -> DataFrame:
-    """Transfer persisted-state handles from ``srcs`` onto ``dst`` so
-    ``release_state(dst)`` frees everything. DataFrame transformations
-    return NEW objects without the attribute, so any composition that
-    derives its result from a stateful operator's output (select, join,
-    union) silently drops the handles — and release_state on the final
-    frame becomes a no-op leak. ``hold``: persisted frames the caller
-    manages directly (e.g. an index it persisted itself)."""
-    handles = list(getattr(dst, "_mrf_persisted_all", ()) or ())
-    for s in srcs:
-        for attr in ("_mrf_persisted", "_mrf_persisted_labels"):
-            h = getattr(s, attr, None)
-            if h is not None:
-                handles.append(h)
-        handles.extend(getattr(s, "_mrf_persisted_all", ()) or ())
-    handles.extend(hold)
-    dst._mrf_persisted_all = handles
-    return dst
 
 
 # ------------------------------------------------------ dedup clustering
@@ -727,15 +687,14 @@ def connected_components(
     Deterministic regardless of iteration schedule (the fixpoint is the
     per-component min), so the oracle replays it with a recursive-CTE
     transitive closure. Only nodes appearing in ``pairs`` are labeled.
-    The returned frame carries ``_mrf_rounds`` (rounds to convergence)
-    and persisted handles released by :func:`release_state`."""
+    The returned frame carries ``_mrf_rounds`` (rounds to convergence)."""
     # Materialize the (possibly expensive) upstream pair plan ONCE —
     # nodes and edges both derive from this checkpoint. Deriving them
     # independently from `pairs` ran the full upstream plan (e.g. a
     # MinHash-LSH cascade) twice before the first contraction round.
-    raw = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).localCheckpoint()
+    raw = state.local_checkpoint(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    )
     # Small-graph fast path (the broadcast-join analogy): a near-dup pair
     # graph is typically ORDERS of magnitude smaller than the corpus —
     # when it fits on the driver (two longs per edge; the default cutoff
@@ -748,11 +707,10 @@ def connected_components(
     # a sequential union-find oracle.
     if raw.count() <= driver_edge_cutoff:
         return _cc_driver_local(raw)
-    nodes = (
+    nodes = state.persist(
         raw.select(F.col("u").alias("n"))
         .union(raw.select(F.col("v").alias("n")))
-        .distinct()
-        .persist()
+        .distinct(),
     )
     nodes.count()
     # directed larger→smaller, the invariant both star ops preserve.
@@ -763,11 +721,10 @@ def connected_components(
     # cluster localCheckpoint blocks live on executors (lost with them);
     # for multi-hour runs set a checkpoint dir and swap in reliable
     # .checkpoint() — same truncation, HDFS-backed.
-    edges = (
+    edges = state.local_checkpoint(
         raw.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
     )
     n_edges = edges.count()
     rounds = 0
@@ -789,13 +746,12 @@ def connected_components(
         )
         # ---- small star: connect u and its smaller neighbors to their min
         mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        small = state.local_checkpoint(
             large.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
         )
         n_new = small.count()
         stable = n_new == n_edges and small.exceptAll(edges).limit(1).count() == 0
@@ -814,8 +770,6 @@ def connected_components(
         )
     )
     out._mrf_rounds = rounds
-    out._mrf_persisted = edges
-    out._mrf_persisted_labels = nodes
     return out
 
 
@@ -917,7 +871,7 @@ def soft_dedup_weights(
     labeled = comp.join(sizes, "component_id").select(
         F.col("doc_id").alias("_sd_id"), "cluster_size"
     )
-    out = (
+    return (
         df.join(labeled, F.col(id_col) == F.col("_sd_id"), "left")
         .drop("_sd_id")
         .select(
@@ -931,7 +885,6 @@ def soft_dedup_weights(
             ).alias("weight"),
         )
     )
-    return carry_state(out, comp)
 
 
 # --------------------------------------------------------------- simhash
@@ -1051,17 +1004,16 @@ def simhash_hamming_pairs(
         )
 
     # the signature table feeds banding AND both verify sides — persist
-    # the compact (doc_id, sig) state so the bit-vote cascade runs once;
-    # caller frees via release_state(result)
-    sig = (
+    # the compact (doc_id, sig) state so the bit-vote cascade runs once
+    sig = state.persist(
         simhash_hex(df, text_col, id_col)
         .select(
             "doc_id",
             "simhash",
             F.expr("cast(conv(substring(simhash, 1, 8), 16, 10) as bigint)").alias("hi"),
             F.expr("cast(conv(substring(simhash, 9, 8), 16, 10) as bigint)").alias("lo"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     bands = sig.select(
         "doc_id",
@@ -1085,7 +1037,7 @@ def simhash_hamming_pairs(
     )
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("hi").alias("hi_a"), F.col("lo").alias("lo_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("hi").alias("hi_b"), F.col("lo").alias("lo_b"))
-    out = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn(
@@ -1097,5 +1049,3 @@ def simhash_hamming_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-    out._mrf_persisted = sig
-    return out

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mrf_etl_spark import state
+
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, header_hex string, mime string, feat_mean double"
 )
@@ -526,10 +528,10 @@ def media_near_dup(
 
     # the distinct frame set is referenced 3x (sizes + both join sides);
     # without a persist the upstream mapInPandas frame sampler runs 3x
-    f = (
+    f = state.persist(
         frames.select(F.col(id_col).alias("doc_id"), F.col(hash_col).alias("fh"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sizes = f.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = f.alias("a"), f.alias("b")
@@ -540,7 +542,7 @@ def media_near_dup(
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    out = (
+    return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn(
@@ -550,9 +552,6 @@ def media_near_dup(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    # caller frees via operators.dedup.release_state after materializing
-    out._mrf_persisted = f
-    return out
 
 
 def phash_band_spec(max_hamming: int) -> list[tuple[int, str, int, int]]:
@@ -631,15 +630,12 @@ def phash_near_dup(
     """
     from pyspark.storagelevel import StorageLevel
 
-    from mrf_etl_spark.operators.dedup import carry_state
-
-    sig = (
+    sig = state.persist(
         perceptual_hash(mm, fake=fake, partitions=partitions)
-        .select("doc_id", "ahash_hi", "ahash_lo")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "ahash_hi", "ahash_lo"),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    out = banded_hamming_pairs(sig, max_hamming, max_band_freq)
-    return carry_state(out, hold=(sig,))
+    return banded_hamming_pairs(sig, max_hamming, max_band_freq)
 
 
 def banded_hamming_pairs(
@@ -849,15 +845,13 @@ def audio_near_dup(
     signature-table discipline)."""
     from pyspark.storagelevel import StorageLevel
 
-    from mrf_etl_spark.operators.dedup import carry_state
-
-    sig = audio_fingerprint(mm, fake=fake, partitions=partitions).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sig = state.persist(
+        audio_fingerprint(mm, fake=fake, partitions=partitions),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    out = banded_hamming_pairs(
+    return banded_hamming_pairs(
         sig, max_hamming, max_band_freq, hi_col="fp_hi", lo_col="fp_lo"
     )
-    return carry_state(out, hold=(sig,))
 
 
 def frame_sums_np(doc_ids, payloads: list[bytes], frame_size: int) -> tuple:

@@ -821,7 +821,7 @@ def leakage_safe_split(
     assignment itself stays a pure per-row expression. Adds columns
     ``rep``, ``bucket`` and ``out_col``.
     """
-    from mrf_etl_spark.operators.dedup import carry_state, connected_components
+    from mrf_etl_spark.operators.dedup import connected_components
 
     cc = connected_components(pairs, a_col, b_col)
     labels = cc.select(
@@ -838,8 +838,7 @@ def leakage_safe_split(
         .drop("_ls_rep")
     )
     out = assign_split(out, "rep", weights, salt, out_col)
-    out = out.withColumn("bucket", hash_bucket("rep", salt))
-    return carry_state(out, cc)
+    return out.withColumn("bucket", hash_bucket("rep", salt))
 
 
 def mixture_solver(

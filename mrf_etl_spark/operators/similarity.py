@@ -26,29 +26,22 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mrf_etl_spark import state
+
 
 def _elem(col: str, i: int) -> Column:
     # element_at is 1-based; embeddings are fixed-length arrays
     return F.element_at(F.col(col), i + 1).cast("double")
 
 
-def norm_unrolled(a: str, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))
-
-
-def cosine_expr(a: str, b: str, dim: int) -> Column:
-    return dot_unrolled(a, b, dim) / (norm_unrolled(a, dim) * norm_unrolled(b, dim))
-
-
 def dot_fold(a: str, b: str) -> Column:
     """Left-associative fold dot product via zip_with+aggregate.
 
-    Bit-identical to dot_unrolled (the 0.0 seed is exact under IEEE
-    addition), but the expression tree is O(1) in dim instead of O(dim):
-    the 64-way unrolled form compiles to ~1 MiB task binaries and its
-    codegen dominated wall time at bench scale (~2.7x). The unrolled form
-    remains the right call only when one compiled plan amortizes over
-    billions of pairs."""
+    Bit-identical to the unrolled ``a[0]*b[0] + a[1]*b[1] + …`` SQL sum
+    (the 0.0 seed is exact under IEEE addition), but the expression tree
+    is O(1) in dim instead of O(dim): at dim=64 the unrolled form's
+    generated method exceeds the JIT's method-size limit and runs
+    interpreted, measured 3x slower (n6 at sf1: 24 s fold vs 74 s)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -58,24 +51,6 @@ def dot_fold(a: str, b: str) -> Column:
 
 def norm_fold(a: str) -> Column:
     return F.sqrt(dot_fold(a, a))
-
-
-def dot_unrolled(a: str, b: str, dim: int) -> Column:
-    """The unrolled twin of :func:`dot_fold` — BIT-IDENTICAL (SQL ``+``
-    is left-associative and the fold's 0.0 seed is exact), built as ONE
-    parsed expression (single py4j round trip; the Column-composed form
-    cost 64 round trips per call). Kept as the oracle-shaped reference
-    and for sub-~16-dim uses; do NOT reach for it on hot paths — at
-    dim=64 the generated method exceeds the JIT's method-size limits and
-    runs as interpreted bytecode, MEASURED 3x slower than dot_fold on
-    the corpus x centroids crossJoin (n6 at sf1: 24 s fold vs 74 s
-    unrolled), exactly the task-binary blowup dot_fold's docstring
-    warns about."""
-    terms = " + ".join(
-        f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))"
-        for i in range(dim)
-    )
-    return F.expr(terms)
 
 
 def cosine_topk(
@@ -361,9 +336,7 @@ def embedding_near_dup_bucketed(
     Deterministic end-to-end (seed centroids = id % centroid_mod == 0,
     ties by cid), so a SQL oracle replays the exact cascade. A pair
     sharing both buckets is scored twice with bit-identical cosine —
-    the final distinct() collapses it. Returns (doc_a, doc_b, cosine);
-    long-lived sessions should call dedup.release_state(result) after
-    materializing."""
+    the final distinct() collapses it. Returns (doc_a, doc_b, cosine)."""
     from pyspark.storagelevel import StorageLevel
 
     from mrf_etl_spark.operators.dedup import widen_narrow_input
@@ -377,14 +350,14 @@ def embedding_near_dup_bucketed(
     # self-join below consumes this twice, and without the persist each
     # side re-runs the whole assign cascade (measured 5.5 s → 1.9 s at
     # sf0.1). State is docs × (vec + cid + norm).
-    bucketed = (
+    bucketed = state.persist(
         _with_topn_centroids(
             emb.select(F.col(id_col), F.col(vec_col)), cent,
             id_col, vec_col, nassign,
         )
         .select(F.col(id_col), F.col(vec_col), "cid")
-        .withColumn("_n", norm_fold(vec_col))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("_n", norm_fold(vec_col)),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a = bucketed.select(
         F.col("cid"),
@@ -398,7 +371,7 @@ def embedding_near_dup_bucketed(
         F.col(vec_col).alias("vb"),
         F.col("_n").alias("nb"),
     )
-    out = (
+    return (
         a.join(b, ["cid"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .withColumn("cosine", dot_fold("va", "vb") / (F.col("na") * F.col("nb")))
@@ -406,8 +379,6 @@ def embedding_near_dup_bucketed(
         .select("doc_a", "doc_b", "cosine")
         .distinct()
     )
-    out._mrf_persisted = bucketed
-    return out
 
 
 def embedding_near_dup_pairs(
@@ -808,12 +779,10 @@ def ivf_index_query(
     Result semantics are identical to :func:`ivf_topk` over the same
     corpus+codebook — batch boundaries and append history are invisible.
 
-    .. note:: The returned DataFrame carries a cached probe cascade
-       (``|queries| * nprobe`` rows) that the plan consumes twice; it
-       cannot be unpersisted before the result is materialized. Callers
-       that keep a long-lived session (e.g. a serving loop) MUST call
-       ``mrf_etl_spark.operators.dedup.release_state(result)`` after
-       consuming the result, or one cached plan is pinned per call."""
+    .. note:: The returned plan reads a cached probe cascade
+       (``|queries| * nprobe`` rows) twice. A long-lived session (e.g. a
+       serving loop) must call :func:`mrf_etl_spark.state.release_state`
+       after consuming the result, or one cached plan is pinned per call."""
     spark = queries.sparkSession
     cent = spark.read.parquet(f"{path}/centroids")
     q = queries.select(
@@ -825,15 +794,14 @@ def ivf_index_query(
     wq = Window.partitionBy("query_id").orderBy(
         F.col("cos_c").desc(), F.col("cid").asc()
     )
-    probes = (
+    # the cascade (centroid read + crossJoin + window) is consumed
+    # TWICE — once collected for the partition filter, once joined
+    # against the index — so materialize it once; the result is
+    # bounded at |queries|*nprobe rows
+    probes = state.persist(
         qprobe.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= nprobe)
         .select("query_id", "qv", "qn", "cid")
-        # the cascade (centroid read + crossJoin + window) is consumed
-        # TWICE — once collected for the partition filter, once joined
-        # against the index — so materialize it once; the result is
-        # bounded at |queries|*nprobe rows
-        .cache()
     )
     # bounded driver-side partition filter: <= min(|queries|*nprobe, |centroids|)
     probed_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
@@ -846,17 +814,11 @@ def ivf_index_query(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
-    # the cached probe cascade must not outlive the query result: carry
-    # the handle so the caller's release_state frees it (a long-lived
-    # serving session would otherwise pin one cached plan per call)
-    from mrf_etl_spark.operators.dedup import carry_state
-
-    return carry_state(out, hold=(probes,))
 
 
 # ------------------------------------------------ product quantization
@@ -1643,9 +1605,11 @@ def kmeans_codebook(
     q = quantize_int8(emb, vec_col, id_col).select(
         F.col(id_col).alias("vid"), "qvec"
     )
-    cent = q.filter((F.col("vid") % seed_mod) == 0).select(
-        F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
-    ).persist()
+    cent = state.persist(
+        q.filter((F.col("vid") % seed_mod) == 0).select(
+            F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
+        )
+    )
     for _ in range(iters):
         assigned = _with_centroid_int8(q, cent)
         sums = (
@@ -1690,7 +1654,7 @@ def kmeans_codebook(
         # references it through both the scoring broadcast and this
         # join — unpersisted, every reference re-executes every earlier
         # iteration's corpus aggs (measured 4x for iters=2 at sf0.1).
-        cent = (
+        cent = state.persist(
             cent.select("cid", "cvec")
             .join(new, "cid", "left")
             .select(
@@ -1699,8 +1663,7 @@ def kmeans_codebook(
                 F.coalesce("n_members", F.lit(0).cast("long")).alias(
                     "n_members"
                 ),
-            )
-            .persist()
+            ),
         )
     return cent.select(
         "cid", "n_members", F.posexplode("cvec").alias("i", "cs")
@@ -1770,9 +1733,11 @@ def pq_codebook_train(
     x = q.select("vid", F.explode(blocks).alias("_k")).select(
         "vid", F.col("_k.b").alias("b"), F.col("_k.bq").alias("bq")
     )
-    cent = x.filter(F.col("vid") < n_codes).select(
-        "b", F.col("vid").alias("cid"), F.col("bq").alias("cq")
-    ).persist()
+    cent = state.persist(
+        x.filter(F.col("vid") < n_codes).select(
+            "b", F.col("vid").alias("cid"), F.col("bq").alias("cq")
+        )
+    )
     zero = F.lit(0).cast("long")
     for _ in range(iters):
         arr = cent.agg(
@@ -1834,7 +1799,7 @@ def pq_codebook_train(
         # unionByName(new, cent.anti_join(new)): every assigned (b, cid)
         # is one of cent's. Lazy persist: one job, duplicated references
         # read the cache.
-        cent = (
+        cent = state.persist(
             cent.select("b", "cid", "cq")
             .join(new, ["b", "cid"], "left")
             .select(
@@ -1844,8 +1809,7 @@ def pq_codebook_train(
                 F.coalesce("n_members", F.lit(0).cast("long")).alias(
                     "n_members"
                 ),
-            )
-            .persist()
+            ),
         )
     return cent.select(
         "b", "cid", "n_members", F.posexplode("cq").alias("i", "cs")
@@ -2057,11 +2021,13 @@ def codebook_drift(
     # PERSIST the k-row result: it feeds BOTH the totals aggregate and
     # the final crossJoin — unpersisted, the whole corpus assignment
     # cascade executes twice (measured ~2x at sf1, the e6 lesson again)
-    full = cent.select("cid").join(counts, "cid", "left").select(
-        "cid",
-        F.coalesce("n_base", zero).alias("n_base"),
-        F.coalesce("n_cur", zero).alias("n_cur"),
-    ).persist()
+    full = state.persist(
+        cent.select("cid").join(counts, "cid", "left").select(
+            "cid",
+            F.coalesce("n_base", zero).alias("n_base"),
+            F.coalesce("n_cur", zero).alias("n_cur"),
+        )
+    )
     totals = full.agg(
         F.sum("n_base").alias("_tb"), F.sum("n_cur").alias("_tc")
     )
@@ -2166,7 +2132,7 @@ def linear_probe(
             ],
             F.count("*").alias("n_mis"),
         )
-        w = (
+        w = state.persist(
             w.crossJoin(F.broadcast(upd))
             .select(
                 F.array(
@@ -2179,8 +2145,7 @@ def linear_probe(
                     ]
                 ).alias("warr"),
                 F.col("n_mis"),
-            )
-            .persist()
+            ),
         )
         outs.append(
             w.select(
@@ -2246,7 +2211,7 @@ def linear_probe_eval(
             ],
             F.count("*").alias("n_mis_train"),
         )
-        w = (
+        w = state.persist(
             w.crossJoin(F.broadcast(upd))
             .select(
                 F.array(
@@ -2259,8 +2224,7 @@ def linear_probe_eval(
                     ]
                 ).alias("warr"),
                 F.col("n_mis_train"),
-            )
-            .persist()
+            ),
         )
         dot = F.aggregate(
             F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
@@ -2346,7 +2310,7 @@ def linear_probe_apply(
                 for i in range(dim)
             ]
         )
-        w = (
+        w = state.persist(
             w.crossJoin(F.broadcast(upd))
             .select(
                 F.array(
@@ -2358,8 +2322,7 @@ def linear_probe_apply(
                         for i in range(dim)
                     ]
                 ).alias("warr")
-            )
-            .persist()
+            ),
         )
     score = F.aggregate(
         F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
@@ -3034,8 +2997,8 @@ def ivf_pq_index_query(
     The per-run corpus PQ encode that dominated n7's scale slope is
     gone — query cost tracks Σ|probed partitions|, not corpus size.
 
-    .. note:: carries a cached probe cascade like ivf_index_query;
-       long-lived callers must ``release_state`` the result."""
+    .. note:: reads a cached probe cascade like ivf_index_query;
+       long-lived callers must ``state.release_state`` after consuming."""
     spark = queries.sparkSession
     cent = spark.read.parquet(f"{path}/centroids")
     seeds = spark.read.parquet(f"{path}/pq_codebook").select(
@@ -3052,13 +3015,12 @@ def ivf_pq_index_query(
     wq = Window.partitionBy("query_id").orderBy(
         F.col("cos_c").desc(), F.col("cid").asc()
     )
-    probes = (
+    # consumed twice: collected for the partition filter, joined for
+    # the per-query bucket match — bounded at |queries|*nprobe rows
+    probes = state.persist(
         qprobe.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= nprobe)
         .select("query_id", F.col("cid").alias("ccid"))
-        # consumed twice: collected for the partition filter, joined for
-        # the per-query bucket match — bounded at |queries|*nprobe rows
-        .cache()
     )
     probed_ccids = [r["ccid"] for r in probes.select("ccid").distinct().collect()]
     idx = (
@@ -3117,14 +3079,11 @@ def ivf_pq_index_query(
     w_k = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    out = (
+    return (
         rer.withColumn("rank", F.row_number().over(w_k))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
-    from mrf_etl_spark.operators.dedup import carry_state
-
-    return carry_state(out, hold=(probes,))
 
 
 def ann_recall_report(
@@ -3495,7 +3454,7 @@ def deflated_directions(
                     ).alias("sarr")
                 )
             )
-            v = upd.select(_requant(F.col("sarr")).alias("varr")).persist()
+            v = state.persist(upd.select(_requant(F.col("sarr")).alias("varr")))
         return v
 
     outs = []
@@ -3604,7 +3563,7 @@ def power_iteration(
                 ),
             )
         )
-        v = upd.select(vq.alias("varr")).persist()
+        v = state.persist(upd.select(vq.alias("varr")))
         outs.append(
             v.select(F.lit(k).alias("iter"), F.posexplode("varr").alias("i", "v"))
         )
@@ -3698,23 +3657,23 @@ def permute_embedding(
     # reads the permuted corpus k times (n15 feeds n5's cascade — ~6
     # references) would otherwise re-run perm's whole derivation per
     # reference (quantize-global max agg + per-dim variance agg: two
-    # corpus passes EACH). Handle attached as _mrf_persisted.
-    pl = perm.agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("j"), F.col("orig")))
-            ),
-            lambda x: x["orig"],
-        ).alias("_pl")
-    ).persist()
-    out = emb.join(F.broadcast(pl)).select(
+    # corpus passes EACH).
+    pl = state.persist(
+        perm.agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("j"), F.col("orig")))
+                ),
+                lambda x: x["orig"],
+            ).alias("_pl")
+        )
+    )
+    return emb.join(F.broadcast(pl)).select(
         F.col(id_col),
         F.transform(
             "_pl", lambda o: F.element_at(F.col(vec_col), o.cast("int") + 1)
         ).alias(vec_col),
     )
-    out._mrf_persisted = pl
-    return out
 
 
 def rp_sign_matrix(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mrf_etl_spark import state
+
 ColumnOrName = Column | str
 
 
@@ -565,11 +567,11 @@ def bloom_decontam_tagged(
     # md5 pass twice); the distinct hash set is tiny (the eval suite) and
     # feeds two consumers — the bitset build (an action) and the exact
     # verification join — so it persists between them.
-    ev = (
+    ev = state.persist(
         doc_shingles(df.filter(eval_pred), text_col, id_col, k)
         .select(shingle_hash_expr(F.col("shingle")).alias("h"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     words = bloom_bitset_words(ev, m_bits, n_hashes)
     c_sh = doc_shingles(df.filter(~eval_pred), text_col, id_col, k).select(
@@ -581,7 +583,7 @@ def bloom_decontam_tagged(
     probed = joined.withColumn(
         "_bloom", bloom_member(F.col("h"), words, m_bits, n_hashes)
     )
-    out = (
+    return (
         probed.groupBy("doc_id")
         .agg(
             F.count("*").alias("n_shingles"),
@@ -600,12 +602,6 @@ def bloom_decontam_tagged(
             (F.col("_miss") == 0).alias("no_false_neg"),
         )
     )
-    # attach the persisted eval set so release_state(out) frees it —
-    # without this every d12 run pins another cached copy for the
-    # session's lifetime (the carry_state doctrine, dedup.py)
-    from mrf_etl_spark.operators.dedup import carry_state
-
-    return carry_state(out, hold=(ev,))
 
 
 def repeated_passages(
@@ -1067,7 +1063,7 @@ def longest_repeat(
     )
     for j, e in enumerate(_span_level_exprs(max_log)):
         words = words.withColumn(f"_h{j}", F.expr(e))
-    words = words.persist()
+    words = state.persist(words)
 
     def span_hashes(ln: int):
         k = int(math.log2(ln))
@@ -1156,7 +1152,7 @@ def longest_repeat(
     # best == 0 → no repeat at min_len, so the min_len emission below is
     # provably empty (the shape-stable empty result)
     ln_out = best or min_len
-    out = (
+    return (
         span_hashes(ln_out)
         .groupBy("hash")
         .agg(
@@ -1170,9 +1166,6 @@ def longest_repeat(
             "hash", "n_docs", "min_doc", "max_doc",
         )
     )
-    from mrf_etl_spark.operators.dedup import carry_state
-
-    return carry_state(out, hold=(words,))
 
 
 def boilerplate_flags(
@@ -1793,19 +1786,21 @@ def bpe_merges(
         # the 1-row winner is referenced TWICE (the output union and the
         # next pass's merge broadcast) — persist it, like the e6/e7
         # iteration codebooks, so each pass's pair count runs once
-        best = cnt.agg(
-            F.min(
-                F.struct(
-                    (-F.col("pair_n")).alias("neg"),
-                    F.col("l").alias("l"),
-                    F.col("r").alias("r"),
-                )
-            ).alias("_b")
-        ).select(
-            F.col("_b.l").alias("bl"),
-            F.col("_b.r").alias("br"),
-            (-F.col("_b.neg")).alias("pair_n"),
-        ).persist()
+        best = state.persist(
+            cnt.agg(
+                F.min(
+                    F.struct(
+                        (-F.col("pair_n")).alias("neg"),
+                        F.col("l").alias("l"),
+                        F.col("r").alias("r"),
+                    )
+                ).alias("_b")
+            ).select(
+                F.col("_b.l").alias("bl"),
+                F.col("_b.r").alias("br"),
+                (-F.col("_b.neg")).alias("pair_n"),
+            )
+        )
         out.append(
             best.select(
                 F.lit(step_i).alias("step"),
@@ -1814,13 +1809,12 @@ def bpe_merges(
                 F.col("pair_n"),
             )
         )
-        sym = (
+        sym = state.persist(
             sym.crossJoin(F.broadcast(best))
             .select(
                 "n",
                 _bpe_merge_step(arr, F.col("bl"), F.col("br")).alias("s"),
-            )
-            .persist()
+            ),
         )
     res = out[0]
     for o in out[1:]:
@@ -1909,7 +1903,7 @@ def _apply_bpe_merges(sym: DataFrame, n_merges: int) -> DataFrame:
                 )
             ).alias("_p"),
         ).select("n", F.col("_p.l").alias("l"), F.col("_p.r").alias("r"))
-        best = (
+        best = state.persist(
             pairs.groupBy("l", "r")
             .agg(F.sum("n").alias("pair_n"))
             .agg(
@@ -1921,17 +1915,15 @@ def _apply_bpe_merges(sym: DataFrame, n_merges: int) -> DataFrame:
                     )
                 ).alias("_b")
             )
-            .select(F.col("_b.l").alias("bl"), F.col("_b.r").alias("br"))
-            .persist()
+            .select(F.col("_b.l").alias("bl"), F.col("_b.r").alias("br")),
         )
-        sym = (
+        sym = state.persist(
             sym.crossJoin(F.broadcast(best))
             .select(
                 "w",
                 "n",
                 _bpe_merge_step(arr, F.col("bl"), F.col("br")).alias("s"),
-            )
-            .persist()
+            ),
         )
     return sym
 
@@ -2049,19 +2041,21 @@ def perplexity_buckets(
     # reference re-runs the whole t22 bigram cascade (two pair-stream
     # shuffles) — measured 2x at sf0.1; sp26 stacked another 2x on top
     # through curriculum_order's two references (r11, the e6 lesson).
-    # State is 3 narrow columns per doc; released via _mrf_persisted.
-    sc = bits.select(
-        "doc_id",
-        F.expr(
-            "CASE WHEN n_bigrams > 0 THEN (8 * total_bits) div n_bigrams "
-            "ELSE CAST(0 AS BIGINT) END"
-        ).alias("score_e"),
-    ).join(
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.col(domain_col).alias("domain")
-        ),
-        "doc_id",
-    ).persist()
+    # State is 3 narrow columns per doc.
+    sc = state.persist(
+        bits.select(
+            "doc_id",
+            F.expr(
+                "CASE WHEN n_bigrams > 0 THEN (8 * total_bits) div n_bigrams "
+                "ELSE CAST(0 AS BIGINT) END"
+            ).alias("score_e"),
+        ).join(
+            docs.select(
+                F.col(id_col).alias("doc_id"), F.col(domain_col).alias("domain")
+            ),
+            "doc_id",
+        )
+    )
     hist = sc.groupBy("domain", "score_e").agg(F.count("*").alias("_c"))
     wcum = (
         Window.partitionBy("domain")
@@ -2088,7 +2082,7 @@ def perplexity_buckets(
             ).alias("t2"),
         )
     )
-    out = sc.join(F.broadcast(thr), "domain").select(
+    return sc.join(F.broadcast(thr), "domain").select(
         "doc_id",
         "domain",
         "score_e",
@@ -2099,8 +2093,6 @@ def perplexity_buckets(
         .otherwise(F.lit("tail"))
         .alias("bucket"),
     )
-    out._mrf_persisted = sc
-    return out
 
 
 def zipf_fit(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from mrf_etl_spark import state
 from mrf_etl_spark.functions import slugify, zip5
 from mrf_etl_spark.functions.categorizer import categorize_sql_case
 from mrf_etl_spark.io import conform
@@ -3865,28 +3866,25 @@ def a25_countmin_heavy_hitters(spark, sf_dir):
     from pyspark import StorageLevel
 
     from mrf_etl_spark.operators.cms import countmin_estimate, countmin_table
-    from mrf_etl_spark.operators.dedup import carry_state
 
     li = t(spark, sf_dir, "lineitem").select(F.col("l_partkey").alias("item"))
     cms = countmin_table(li, "item", width=A25_CMS_W, depth=A25_CMS_D)
     # the exact top-k feeds BOTH the probe set and the final join — a
     # 20-row persist keeps the full-fact groupBy from running twice
-    # (released by the harnesses via release_state)
-    top = (
+    top = state.persist(
         li.groupBy("item")
         .agg(F.count("*").alias("true_n"))
         .orderBy(F.col("true_n").desc(), F.col("item").asc())
-        .limit(A25_TOP)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .limit(A25_TOP),
+        StorageLevel.MEMORY_AND_DISK,
     )
     est = countmin_estimate(top, cms, "item", width=A25_CMS_W, depth=A25_CMS_D)
-    out = top.join(est, "item").select(
+    return top.join(est, "item").select(
         "item",
         "true_n",
         "cms_est",
         (F.col("cms_est") >= F.col("true_n")).alias("never_under"),
     )
-    return carry_state(out, hold=(top,))
 
 
 # Persisted mergeable-sketch state (round 8, VERDICT r7 #8): the lake
@@ -3903,7 +3901,6 @@ def a25_countmin_heavy_hitters(spark, sf_dir):
 def _register_sketch_lake():
     from mrf_etl_spark.operators import sketchlake as sl
     from mrf_etl_spark.operators.cms import countmin_estimate, countmin_table
-    from mrf_etl_spark.operators.dedup import carry_state
 
     @register(
         "a26_persisted_cms",
@@ -3931,21 +3928,20 @@ def _register_sketch_lake():
                 path,
             )
         cms = sl.cms_lake_merge(spark, path)
-        top = (
+        top = state.persist(
             li.groupBy("item")
             .agg(F.count("*").alias("true_n"))
             .orderBy(F.col("true_n").desc(), F.col("item").asc())
-            .limit(A25_TOP)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .limit(A25_TOP),
+            StorageLevel.MEMORY_AND_DISK,
         )
         est = countmin_estimate(top, cms, "item", width=A25_CMS_W, depth=A25_CMS_D)
-        out = top.join(est, "item").select(
+        return top.join(est, "item").select(
             "item",
             "true_n",
             "cms_est",
             (F.col("cms_est") >= F.col("true_n")).alias("never_under"),
         )
-        return carry_state(out, hold=(top,))
 
     @register(
         "a27_persisted_hll",

@@ -1099,13 +1099,9 @@ _NULL_TOKEN = "∅"
 
 def _fused_spark_fn(components: list[tuple[str, list[str]]]):
     def fn(spark, sf_dir):
-        from mrf_etl_spark.operators.dedup import carry_state
-
         slices = []
-        stateful = []
         for comp, dbl in components:
             df = REGISTRY[comp].spark_fn(spark, sf_dir)
-            stateful.append(df)
             arr = _ARRAY_COLS.get(comp, set())
             key_cols = [c for c in df.columns if c not in dbl]
             if key_cols:
@@ -1142,10 +1138,7 @@ def _fused_spark_fn(components: list[tuple[str, list[str]]]):
         out = slices[0]
         for s in slices[1:]:
             out = out.unionByName(s)
-        # component frames may carry persisted-state handles (pipe2/d9);
-        # the union dropped them — carry so release_state on the probe
-        # result frees every component's cache
-        return carry_state(out, *stateful)
+        return out
 
     return fn
 

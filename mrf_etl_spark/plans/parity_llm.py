@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mrf_etl_spark import state
 from mrf_etl_spark.operators import dedup as dd
 from mrf_etl_spark.operators import similarity as sim
 from mrf_etl_spark.operators import textops as tx
@@ -625,8 +626,8 @@ def t6_pii_scrub(spark, sf_dir):
 
 
 def _cos_sql(a: str, b: str) -> str:
-    """64-term unrolled cosine mirror of operators.similarity.cosine_expr —
-    identical left-associative op order → bit-identical doubles."""
+    """The oracle's 64-term unrolled cosine in SQL: the same left-associative
+    op order as ``similarity.dot_fold`` → bit-identical doubles."""
     dot = " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
     )
@@ -3135,13 +3136,10 @@ def pipe2_fuzzy_dedup(spark, sf_dir):
     comp = dd.connected_components(pairs)
     kept = dd.keep_canonical(corpus, pairs, id_col="doc_id", components=comp)
     dropped = corpus.join(kept.select("doc_id"), "doc_id", "left_anti")
-    out = dropped.join(comp, "doc_id").select(
+    return dropped.join(comp, "doc_id").select(
         F.col("doc_id").alias("dropped_id"),
         F.col("component_id").alias("keep_id"),
     )
-    # the select/join chain dropped the state handles — carry them so
-    # release_state(result) actually frees the signature + CC caches
-    return dd.carry_state(out, pairs_raw, comp)
 
 
 SEQ_BUDGET = 2000  # tokens per packed training sequence
@@ -3418,13 +3416,13 @@ def d9_incremental_dedup(spark, sf_dir):
     # a COMPUTED index is referenced twice inside dedup_incremental (band
     # projection + hset fetch) — persist it so the signature aggregation
     # runs once; in production the index is a read-from-disk table
-    index = dd.per_doc_signature_state(
-        corpus, "text", "doc_id", SHINGLE_K, NUM_HASHES
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    out = dd.dedup_incremental(
+    index = state.persist(
+        dd.per_doc_signature_state(corpus, "text", "doc_id", SHINGLE_K, NUM_HASHES),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    return dd.dedup_incremental(
         batch, index, "text", "doc_id", SHINGLE_K, NUM_HASHES, BANDS, JACCARD_T
     )
-    return dd.carry_state(out, hold=(index,))
 
 
 M4_FRAME = 64  # bytes/frame: ~10 frames per synthetic doc (max 577 B)
@@ -3747,7 +3745,6 @@ def _register_pipe8():
         from pyspark.storagelevel import StorageLevel
 
         from mrf_etl_spark.operators import sampling as sp
-        from mrf_etl_spark.operators.dedup import carry_state
         from mrf_etl_spark.operators.textops import token_count_ws
 
         # the manifest plan reads its corpus multiple times (solver agg,
@@ -3774,7 +3771,7 @@ def _register_pipe8():
         # leaf. (Unlike the per-iteration trainer case where eager
         # materialization lost, this cuts a 16-exchange cascade ×5
         # replanning, not a 1-stage agg.)
-        gated = (
+        gated = state.local_checkpoint(
             t(spark, sf_dir, "documents")
             .join(released, "doc_id")
             .select(
@@ -3782,9 +3779,8 @@ def _register_pipe8():
                 F.col("source"),
                 token_count_ws("text").cast("long").alias("n_tok"),
             )
-            .localCheckpoint(eager=True)
         )
-        out = sp.training_order(
+        return sp.training_order(
             gated,
             SP23_TARGETS,
             None,  # corpus-proportional budget (one epoch-equivalent)
@@ -3794,8 +3790,6 @@ def _register_pipe8():
             salt="order",
             token_col="n_tok",
         )
-        # caller frees via release_state after materializing
-        return carry_state(out, hold=(gated,))
 
     return pipe8_decontam_training_order
 
@@ -4109,19 +4103,18 @@ def pipe3_corpus_release(spark, sf_dir):
     # (the pipeline's heaviest stage) re-executes for each; persisting
     # the post-gate subset is the checkpoint a production release run
     # takes anyway (measured at sf1: 15.7 s -> 5.5-6.4 s warm)
-    corpus = (
+    corpus = state.persist(
         gated.filter(F.col("doc_id") % EVAL_MOD != 0)
-        .select("doc_id", "text", "source")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "text", "source"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     ev = d.filter(F.col("doc_id") % EVAL_MOD == 0).select("doc_id", "text")
     overlap = tx.contamination_overlap(corpus.select("doc_id", "text"), ev)
     dirty = overlap.filter(F.col("overlap_frac") >= PIPE3_CONTAM_T).select("doc_id")
     clean = corpus.join(dirty, "doc_id", "left_anti")
-    out = sp.global_shuffle(
+    return sp.global_shuffle(
         clean.select("doc_id", "source"), "doc_id", salt="release"
     ).select("doc_id", "source", "shuffle_pos")
-    return dd.carry_state(out, hold=(corpus,))
 
 
 # t11: rare-token ratio
@@ -4428,8 +4421,7 @@ def q4_dedup_quality(spark, sf_dir, lsh=None, exact=None):
             exact = dd.ngram_jaccard_pairs_capped(
                 docs, "text", "doc_id", SHINGLE_K, JACCARD_T, max_doc_freq=MAX_DF
             )
-    out = dd.dedup_quality_report(lsh, exact)
-    return dd.carry_state(out, lsh, exact)
+    return dd.dedup_quality_report(lsh, exact)
 
 
 # sp10: length-bucketed batch assignment
@@ -5529,11 +5521,13 @@ def q7_incremental_corpus_card(spark, sf_dir):
     # the tiny merged state feeds two consumers (card totals + quantile
     # windows); truncate its lineage so documents is scanned once per
     # half, not once per downstream reference
-    state = merge_card_states(
-        corpus_card_state(d.filter(F.col("doc_id") % 2 == 0)),
-        corpus_card_state(d.filter(F.col("doc_id") % 2 == 1)),
-    ).localCheckpoint()
-    card = corpus_card_from_state(state)
+    merged = state.local_checkpoint(
+        merge_card_states(
+            corpus_card_state(d.filter(F.col("doc_id") % 2 == 0)),
+            corpus_card_state(d.filter(F.col("doc_id") % 2 == 1)),
+        )
+    )
+    card = corpus_card_from_state(merged)
 
     w = tx.token_count_ws("text").cast("long")
     per = d.select("source", "lang", w.alias("_w")).filter(F.col("_w") >= 1)
@@ -6569,7 +6563,6 @@ def _register_sp26():
     )
     def sp26_perplexity_curriculum(spark, sf_dir):
         from mrf_etl_spark.operators import sampling as sp
-        from mrf_etl_spark.operators.dedup import carry_state
 
         b = tx.perplexity_buckets(
             t(spark, sf_dir, "documents"), "text", "doc_id", "source"
@@ -6580,21 +6573,20 @@ def _register_sp26():
         # and re-PLANNED — the whole tertile-threshold cascade above
         # t25's cached score frame (the sp26 plan printed 98 exchanges;
         # the residual-plan-mass item of VERDICT r11 #6). Two narrow
-        # longs per doc; released with the t25 state via release_state.
-        banded = b.select(
-            "doc_id",
-            F.when(F.col("bucket") == "head", 0)
-            .when(F.col("bucket") == "middle", 1)
-            .otherwise(2)
-            .cast("long")
-            .alias("band"),
-        ).persist()
-        out = sp.curriculum_order(
+        # longs per doc.
+        banded = state.persist(
+            b.select(
+                "doc_id",
+                F.when(F.col("bucket") == "head", 0)
+                .when(F.col("bucket") == "middle", 1)
+                .otherwise(2)
+                .cast("long")
+                .alias("band"),
+            )
+        )
+        return sp.curriculum_order(
             banded, "doc_id", "band", salt="ccnet"
         ).select("doc_id", "band", "curriculum_pos")
-        # t25's persisted score frame must survive until the caller
-        # materializes; the bench frees both via release_state
-        return carry_state(out, b, hold=(banded,))
 
     return sp26_perplexity_curriculum
 
@@ -7127,7 +7119,7 @@ def sp25_dedup_aware_mixture(spark, sf_dir):
         corpus, "text", "doc_id", SHINGLE_K, JACCARD_T
     ).select("doc_a", "doc_b")
     weights = dd.soft_dedup_weights(corpus.select("doc_id"), pairs, "doc_id")
-    out = sp.weighted_mixture_solver(
+    return sp.weighted_mixture_solver(
         t(spark, sf_dir, "documents"),
         weights,
         SP23_TARGETS,
@@ -7137,7 +7129,6 @@ def sp25_dedup_aware_mixture(spark, sf_dir):
         "doc_id",
         default_bp=0,
     )
-    return dd.carry_state(out, weights)
 
 
 @register(
@@ -7268,7 +7259,7 @@ def pipe5_release_v2(spark, sf_dir):
     # three downstream consumers (the pair cascade, the split assignment,
     # the token rollup) would otherwise each re-execute the scrub's two
     # window shuffles — the pipe3 persist-between-consumers precedent
-    kept = scrubbed.filter(tx.quality_logit("text") > 0).persist()
+    kept = state.persist(scrubbed.filter(tx.quality_logit("text") > 0))
     pairs = dd.ngram_jaccard_pairs(
         kept, "text", "doc_id", SHINGLE_K, JACCARD_T
     ).select("doc_a", "doc_b")
@@ -7279,10 +7270,9 @@ def pipe5_release_v2(spark, sf_dir):
     tok = kept.select(
         "doc_id", tx.token_count_ws("text").cast("long").alias("tok")
     )
-    res = out.join(tok, "doc_id").select(
+    return out.join(tok, "doc_id").select(
         "doc_id", "rep", "bucket", "split", "tok"
     )
-    return dd.carry_state(res, out, hold=(kept,))
 
 
 # -------------------- round-8: incremental release flow (diff-gated)
@@ -7404,7 +7394,9 @@ def pipe6_incremental_release(spark, sf_dir):
         .alias("text"),
     )
     # two consumers (kept carry-over + delta) read the diff — persist it
-    diff = dataset_diff(a, b, "doc_id", ["text"], keep=("source", "text")).persist()
+    diff = state.persist(
+        dataset_diff(a, b, "doc_id", ["text"], keep=("source", "text"))
+    )
     kept = diff.filter(F.col("status") == "unchanged").select(
         F.col("a_source").alias("source"),
         F.lit("kept").alias("final_status"),
@@ -7441,11 +7433,10 @@ def pipe6_incremental_release(spark, sf_dir):
         "source", F.lit("dropped_gate").alias("final_status"), "text"
     )
     final = kept.unionByName(accepted).unionByName(dropped)
-    manifest = final.groupBy("source", "final_status").agg(
+    return final.groupBy("source", "final_status").agg(
         F.count("*").alias("n_docs"),
         F.sum(tx.token_count_ws("text").cast("long")).alias("total_tokens"),
     )
-    return dd.carry_state(manifest, hold=(diff,))
 
 
 # ------------------------------- round-7: product quantization (e4)
@@ -8209,12 +8200,10 @@ def _n15_perm_ctes() -> str:
     "(operators/similarity.dim_permutation, permute_embedding).",
 )
 def n15_ann_pq_dimperm(spark, sf_dir):
-    from mrf_etl_spark.operators.dedup import carry_state
-
     emb = t(spark, sf_dir, "embeddings")
     perm = sim.dim_permutation(emb, "vec_id", "embedding", DIM, _PQ_BLOCKS)
     embp = sim.permute_embedding(emb, perm, "vec_id", "embedding")
-    out = sim.pq_adc_topk(
+    return sim.pq_adc_topk(
         embp,
         dim=DIM,
         n_blocks=_PQ_BLOCKS,
@@ -8222,9 +8211,6 @@ def n15_ann_pq_dimperm(spark, sf_dir):
         n_candidates=_N5_CANDIDATES,
         k=_N5_K,
     )
-    # permute_embedding's persisted 1-row permutation rides through the
-    # cascade; the bench frees it via release_state
-    return carry_state(out, embp)
 
 
 _N16_KPROJ = 16

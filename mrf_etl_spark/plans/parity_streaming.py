@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mrf_etl_spark import state
 from mrf_etl_spark.plans.parity import _scratch, register, t
 from mrf_etl_spark.streaming import sessionize_events, windowed_event_counts
 
@@ -1420,9 +1421,11 @@ def _register_st20():
         q_all = sim.quantize_int8(emb).select(
             F.col("vec_id").alias("vid"), "qvec"
         )
-        cent = q_all.filter((F.col("vid") % _E6_SEED_MOD) == 0).select(
-            F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
-        ).persist()
+        cent = state.persist(
+            q_all.filter((F.col("vid") % _E6_SEED_MOD) == 0).select(
+                F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
+            )
+        )
 
         # base counts: the stored training-time artifact (one pass).
         # Quantization is per-row, so quantize the FILTERED base rows
@@ -1477,7 +1480,7 @@ def _register_st20():
         zero = F.lit(0).cast("long")
         # persist the k-row table: it feeds both the totals agg and the
         # final crossJoin (codebook_drift's documented 2x lesson)
-        full = (
+        full = state.persist(
             cent.select("cid")
             .join(base, "cid", "left")
             .join(cur_counts, "cid", "left")
@@ -1485,8 +1488,7 @@ def _register_st20():
                 "cid",
                 F.coalesce("n_base", zero).cast("long").alias("n_base"),
                 F.coalesce("n_cur", zero).cast("long").alias("n_cur"),
-            )
-            .persist()
+            ),
         )
         totals = full.agg(
             F.sum("n_base").alias("_tb"), F.sum("n_cur").alias("_tc")
@@ -1651,11 +1653,13 @@ def _register_st22():
             "n",
             F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("s"),
         )
-        per_word = tx._apply_bpe_merges(sym, T23_MERGES).select(
-            "w",
-            F.length("w").cast("long").alias("_chars"),
-            F.size(F.split(F.col("s"), " ")).cast("long").alias("_toks"),
-        ).persist()
+        per_word = state.persist(
+            tx._apply_bpe_merges(sym, T23_MERGES).select(
+                "w",
+                F.length("w").cast("long").alias("_chars"),
+                F.size(F.split(F.col("s"), " ")).cast("long").alias("_toks"),
+            )
+        )
 
         staging = _staged_halves(docs, f"st22/{sf_dir}", F.col("doc_id") % 2 == 0)
         lake = _scratch("st22_fertility_lake")
@@ -1748,12 +1752,14 @@ def _register_st23():
         cb = sim.kmeans_codebook(
             emb, "vec_id", "embedding", DIM, seed_mod=_E6_SEED_MOD, iters=2
         )
-        cent = cb.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cs"))),
-                lambda s: s.cs,
-            ).alias("cvec")
-        ).persist()
+        cent = state.persist(
+            cb.groupBy("cid").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("i", "cs"))),
+                    lambda s: s.cs,
+                ).alias("cvec")
+            )
+        )
 
         staging = _staged_halves(emb, f"st23/{sf_dir}", F.col("vec_id") % 2 == 0)
         lake = _scratch("st23_cluster_lake")
@@ -1923,9 +1929,11 @@ def _register_st25():
         from mrf_etl_spark.plans.parity_llm import EVAL_MOD, SHINGLE_K
 
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-        euniv = eval_ngram_universe(
-            docs.filter(F.col("doc_id") % EVAL_MOD == 0), "text", SHINGLE_K
-        ).persist()
+        euniv = state.persist(
+            eval_ngram_universe(
+                docs.filter(F.col("doc_id") % EVAL_MOD == 0), "text", SHINGLE_K
+            )
+        )
         corpus = docs.filter(F.col("doc_id") % EVAL_MOD != 0)
 
         staging = _staged_halves(corpus, f"st25/{sf_dir}", F.col("doc_id") % 2 == 0)

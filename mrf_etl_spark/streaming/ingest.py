@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mrf_etl_spark import state
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -275,11 +277,7 @@ def stream_dedup_ingest(
     the stream's whole lifetime, holding state in a parquet index
     instead of the state store (unbounded horizon, spillable, shared
     with batch ingestion)."""
-    from mrf_etl_spark.operators.dedup import (
-        dedup_incremental,
-        per_doc_signature_state,
-        release_state,
-    )
+    from mrf_etl_spark.operators.dedup import dedup_incremental, per_doc_signature_state
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -288,24 +286,24 @@ def stream_dedup_ingest(
             have_index = True
         except Exception:  # noqa: BLE001  (first batch: no index yet)
             have_index = False
-        if have_index:
-            res = dedup_incremental(
-                batch_df, index, text_col, id_col, k, num_hashes, bands, threshold
-            )
-            keep_ids = res.filter(F.col("survived")).select(
-                F.col("doc_id").alias(id_col)
-            )
-            survivors = batch_df.join(keep_ids, id_col, "left_semi")
-        else:
-            res = None
+        # the batch's signature state and survivor checkpoint die with
+        # the batch, once both lake appends have read them
+        with state.scope():
             survivors = batch_df
-        survivors = survivors.localCheckpoint()  # freeze before the lake appends
-        if res is not None:
-            release_state(res)
-        survivors.write.mode("append").parquet(doc_lake)
-        per_doc_signature_state(
-            survivors, text_col, id_col, k, num_hashes
-        ).write.mode("append").parquet(index_lake)
+            if have_index:
+                res = dedup_incremental(
+                    batch_df, index, text_col, id_col, k, num_hashes, bands, threshold
+                )
+                keep_ids = res.filter(F.col("survived")).select(
+                    F.col("doc_id").alias(id_col)
+                )
+                survivors = batch_df.join(keep_ids, id_col, "left_semi")
+            # freeze before the lake appends
+            survivors = state.local_checkpoint(survivors)
+            survivors.write.mode("append").parquet(doc_lake)
+            per_doc_signature_state(
+                survivors, text_col, id_col, k, num_hashes
+            ).write.mode("append").parquet(index_lake)
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -50,8 +50,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entry_mod
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.session import get_spark
+    from mrf_etl_spark.state import release_state
 
     qs = entry_mod.queries()
     spark = get_spark(
@@ -80,7 +80,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.toPandas()
             runs[name].append(time.perf_counter() - t0)
-            release_state(df)
+            release_state()
             spark.sparkContext.setJobDescription(None)
     out = {
         "variant": variant,

@@ -31,9 +31,9 @@ def main() -> int:
     from oracle_harness import compare
 
     import __spark_entry__ as entrymod
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.plans.parity_fused import DRIVER_WINDOW, ordered_registry
     from mrf_etl_spark.session import get_spark
+    from mrf_etl_spark.state import release_state
 
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
@@ -62,7 +62,7 @@ def main() -> int:
                     f"read_parquet('{sf_dir}/{tbl}.parquet')"
                 )
             r = compare(name, df, q.oracle, con)
-            release_state(df)
+            release_state()
             con.close()
         except Exception as e:  # noqa: BLE001
             r = {"name": name, "status": "ERROR", "error": str(e)[:300]}

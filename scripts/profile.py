@@ -1,16 +1,19 @@
-"""Round-11 optimization profiler.
+"""Plan-capture profiler.
 
 For each named query (default: a built-in heavy set), at $SPARK_GRAFT_SF_DIR
 (default sf0.1):
   - build the DataFrame, capture .explain("formatted") to
-    plans/r11/<name>_<tag>.txt (tag from argv, default "before"),
+    <outdir>/<name>_<tag>.txt (tag from argv, default "before"),
   - time the computation via the noop sink (guide §1.4) so we time the
     plan, not result delivery,
   - also time one toPandas() pass (the bench's timed action) for
     comparability,
   - print per-query: noop_s, pandas_s, n_exchanges, joins seen.
 
-Usage: python scripts/profile_r11.py [tag] [query ...]
+Usage: python scripts/profile.py <outdir> [tag] [query ...]
+
+e.g. ``python scripts/profile.py plans/r13 before n7_ann_ivf_pq`` regenerates
+one capture; captures are not committed.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 HEAVY = [
     "st19_stream_ivfpq_ingest",
@@ -59,16 +62,19 @@ HEAVY = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    args = sys.argv[1:]
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    outdir = Path(sys.argv[1])
+    args = sys.argv[2:]
     tag = args[0] if args else "before"
     names = args[1:] if len(args) > 1 else HEAVY
 
     import __spark_entry__ as entry_mod
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.session import get_spark
+    from mrf_etl_spark.state import release_state
 
     qs = entry_mod.queries()
-    spark = get_spark(app_name=f"profile-r11-{tag}")
+    spark = get_spark(app_name=f"profile-{tag}")
     # same warm-up as bench.py: footers + a throwaway query + python workers
     from pyspark.sql import functions as F
 
@@ -86,7 +92,6 @@ def main() -> None:
 
     spark.range(64).repartition(32).mapInPandas(_ident, "id long").count()
 
-    outdir = Path("/root/repo/plans/r11")
     outdir.mkdir(parents=True, exist_ok=True)
 
     for name in names:
@@ -94,7 +99,7 @@ def main() -> None:
         if fn is None:
             print(f"{name}: NOT REGISTERED")
             continue
-        spark.sparkContext.setJobDescription(f"r11-{tag}:{name}")
+        spark.sparkContext.setJobDescription(f"{tag}:{name}")
         try:
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -116,7 +121,7 @@ def main() -> None:
             t0 = time.perf_counter()
             n_rows = len(df.toPandas().index)
             t_pd = time.perf_counter() - t0
-            release_state(df)
+            release_state()
             print(
                 f"{name}: build={t_build:.2f}s noop={t_noop:.2f}s "
                 f"pandas={t_pd:.2f}s rows={n_rows} exchanges={n_exch} "

@@ -113,6 +113,7 @@ def main() -> int:
 
     import mrf_etl_spark.plans.parity_llm  # noqa: F401  (registers LLM ops)
     import mrf_etl_spark.plans.parity_streaming  # noqa: F401  (streaming ops)
+    from mrf_etl_spark import state
     from mrf_etl_spark.plans.parity_fused import ordered_registry
     from mrf_etl_spark.session import get_spark
 
@@ -159,11 +160,13 @@ def main() -> int:
             con.close()
             con = fresh_con()
         try:
-            from mrf_etl_spark.operators.dedup import release_state
-
+            before = state.held(spark)
             df = q.spark_fn(spark, sf_dir)
             r = compare(name, df, q.oracle, con)
-            release_state(df)
+            state.release_state()
+            cache, rdds = state.leaked(before, state.held(spark))
+            if cache or rdds:
+                r.update(status="LEAK", leaked_cache=cache, leaked_rdds=rdds)
         except Exception as e:  # noqa: BLE001
             r = {"name": name, "status": "ERROR", "error": str(e)[:500]}
         flag = r["status"]

@@ -133,7 +133,7 @@ def test_component_cols_match_live_schema(spark, sf_dir, fused):
     silently diverges. Pin column NAMES+ORDER and double-typed columns."""
     from pyspark.sql import types as T
 
-    from mrf_etl_spark.operators.dedup import release_state
+    from mrf_etl_spark.state import release_state
 
     for comp, dbl in FUSE_SPECS[fused]:
         df = REGISTRY[comp].spark_fn(spark, sf_dir)
@@ -144,4 +144,4 @@ def test_component_cols_match_live_schema(spark, sf_dir, fused):
         assert live_dbl == dbl, (comp, live_dbl, dbl)
         # stateful components (pipe2/d9) persist caches at frame build —
         # free them; this test only needed the schema
-        release_state(df)
+        release_state()

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from mrf_etl_spark.operators import dedup as dd
 from mrf_etl_spark.operators import similarity as sim
 from mrf_etl_spark.operators.multimodal import decode_media
+from mrf_etl_spark.state import release_state
 from mrf_etl_spark.plans.parity_llm import (
     DIM,
     ID_SHIFT,
@@ -537,7 +538,7 @@ def test_ngram_jaccard_cap_semantics(spark):
         df, "text", "doc_id", 3, 0.5, max_doc_freq=10
     )
     capped = {(r.doc_a, r.doc_b): r.jaccard for r in capped_df.collect()}
-    dd.release_state(capped_df)
+    release_state()
 
     assert (100, 101) in exact  # identical docs, jaccard 1.0
     assert (100, 101) not in capped  # their only shingle is hot -> pruned
@@ -557,7 +558,7 @@ def test_connected_components_chain_and_canonical(spark):
     )
     comp = dd.connected_components(pairs)
     got = {r.doc_id: r.component_id for r in comp.collect()}
-    dd.release_state(comp)
+    release_state()
     assert got == {2: 2, 7: 2, 9: 2, 40: 2, 20: 20, 21: 20}
 
     docs = spark.createDataFrame(
@@ -583,7 +584,7 @@ def test_connected_components_long_path_converges_logarithmically(spark):
     assert len(rows) == 101
     assert all(r.component_id == 0 for r in rows)
     assert 0 < comp._mrf_rounds <= 8
-    dd.release_state(comp)
+    release_state()
 
 
 def test_tfidf_top_terms(spark):
@@ -1097,9 +1098,7 @@ def test_pipe6_incremental_release_gates_only_the_delta(spark, tmp_path):
         spark, str(tmp_path)
     )
     got = {(r.source, r.final_status): r.n_docs for r in out.collect()}
-    from mrf_etl_spark.operators.dedup import release_state
-
-    release_state(out)
+    release_state()
     # kept: docs 3 (low quality but unchanged — NOT re-gated) and 6
     assert got.get(("s0", "kept")) == 2, got
     # doc 5 changed+good → updated; doc 8 added+contaminated and doc 0
@@ -1358,10 +1357,7 @@ def test_containment_finds_embedded_doc_jaccard_misses(spark):
     """A short doc fully embedded in a much longer one: containment ~1.0,
     jaccard diluted far below threshold — the asymmetric metric's reason
     to exist."""
-    from mrf_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs_capped,
-        release_state,
-    )
+    from mrf_etl_spark.operators.dedup import ngram_jaccard_pairs_capped
 
     short = "alpha beta gamma delta epsilon zeta"
     filler = " ".join(f"w{i}" for i in range(200))
@@ -1372,7 +1368,7 @@ def test_containment_finds_embedded_doc_jaccard_misses(spark):
         df, "text", "doc_id", k=3, threshold=0.8, metric="containment"
     )
     rows = cont.collect()
-    release_state(cont)
+    release_state()
     assert [(r.doc_a, r.doc_b) for r in rows] == [(1, 2)]
     assert rows[0].containment == 1.0
 
@@ -1380,7 +1376,7 @@ def test_containment_finds_embedded_doc_jaccard_misses(spark):
         df, "text", "doc_id", k=3, threshold=0.8, metric="jaccard"
     )
     jrows = jac.collect()
-    release_state(jac)
+    release_state()
     assert jrows == []  # union denominator dilutes the embedded match
 
 
@@ -1408,8 +1404,7 @@ def test_q4_composed_reuses_precomputed_pair_frames(spark, sf_dir):
     crow, srow = composed.collect()[0], standalone.collect()[0]
     assert crow.asDict() == srow.asDict()
     assert crow.n_exact > 0 and crow.recall is not None
-    dd.release_state(composed)
-    dd.release_state(standalone)
+    release_state()
 
 
 def test_simhash_hamming_finds_injected_near_dups(spark, sf_dir):
@@ -1424,7 +1419,7 @@ def test_simhash_hamming_finds_injected_near_dups(spark, sf_dir):
     }
     pairs = dd.simhash_hamming_pairs(corpus, "text", "doc_id", max_hamming=3)
     got = {(r.doc_a, r.doc_b): r.hamming for r in pairs.collect()}
-    dd.release_state(pairs)
+    release_state()
     # exactness of every returned distance
     for (a, b), h in got.items():
         assert h == bin(sigs[a] ^ sigs[b]).count("1"), (a, b)
@@ -1819,9 +1814,7 @@ def test_ivf_pq_index_persisted_equals_inplan(spark, tmp_path):
         for r in out.collect()
     )
     assert got == expect
-    from mrf_etl_spark.operators.dedup import release_state
-
-    release_state(out)
+    release_state()
 
 
 def test_leakage_safe_split_clusters_move_as_one_unit(spark):
@@ -3867,7 +3860,6 @@ def test_pipe8_decontam_training_order_composition(spark):
     """pipe8 == pipe7 over the q11-released corpus: no contaminated doc
     ever appears in the manifest, and the manifest equals training_order
     run over the manually gated corpus (same targets/budget/salt)."""
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.operators.sampling import training_order
     from mrf_etl_spark.plans.parity import REGISTRY
     import mrf_etl_spark.plans.parity_fused  # noqa: F401
@@ -3880,7 +3872,7 @@ def test_pipe8_decontam_training_order_composition(spark):
 
     df = REGISTRY["pipe8_decontam_training_order"].spark_fn(spark, sf)
     got = sorted(map(tuple, df.collect()))
-    release_state(df)
+    release_state()
     ids = {t[0] for t in got}
     assert ids and ids <= released
     assert not ids & contaminated
@@ -3906,7 +3898,6 @@ def test_repeat_ladder_catches_what_d7_misses(spark):
     6-word repeat is below its granularity. The ladder reports the
     floor-power-of-2 length (4, with 3 repeated windows inside the
     block); longest_repeat resolves the exact length 6."""
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.operators.textops import (
         longest_repeat,
         repeat_ladder,
@@ -3928,7 +3919,7 @@ def test_repeat_ladder_catches_what_d7_misses(spark):
     assert lad == [(1, 4, 3), (2, 4, 3)]
     lr = longest_repeat(docs)
     got = [(r.rep_len, r.n_docs, r.min_doc, r.max_doc) for r in lr.collect()]
-    release_state(lr)
+    release_state()
     assert got == [(6, 2, 1, 2)]
 
     # no cross-doc repeat at all -> shape-stable empty result
@@ -3938,7 +3929,7 @@ def test_repeat_ladder_catches_what_d7_misses(spark):
     )
     lr2 = longest_repeat(solo)
     assert lr2.count() == 0
-    release_state(lr2)
+    release_state()
     assert repeat_ladder(solo).count() == 0
 
 
@@ -3975,11 +3966,7 @@ def test_sp25_dedup_aware_mixture_discounts_duplicates(spark):
     doc. With equal targets, A's effective tokens are HALF its raw
     tokens, so its rate_bp is double what the raw solver would assign —
     the unique content gets the repetition the share implies."""
-    from mrf_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        release_state,
-        soft_dedup_weights,
-    )
+    from mrf_etl_spark.operators.dedup import ngram_jaccard_pairs, soft_dedup_weights
     from mrf_etl_spark.operators.sampling import weighted_mixture_solver
 
     base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
@@ -3999,7 +3986,7 @@ def test_sp25_dedup_aware_mixture_discounts_duplicates(spark):
             docs, w, {"A": 5000, "B": 5000}, 100, "source", "text", "doc_id"
         ).collect()
     }
-    release_state(w)
+    release_state()
     # A: 10 + 11 raw tokens, each at 1/2 -> (10*10000 + 11*10000) div 2
     assert out["A"][0] == (10 * 10000) // 2 + (11 * 10000) // 2
     # B: 10 tokens, singleton weight 1
@@ -4192,14 +4179,12 @@ def test_sp26_perplexity_curriculum_band_monotone(spark):
     import mrf_etl_spark.plans.parity_fused  # noqa: F401
 
     sf = "/root/testdata/sf0.001"
-    from mrf_etl_spark.operators.dedup import release_state
-
     out = REGISTRY["sp26_perplexity_curriculum"].spark_fn(spark, sf)
     rows = out.collect()
-    # drop the carried t25 slim-frame persist: a leaked cache entry
+    # drop the t25 slim-frame persist: a leaked cache entry
     # changes how LATER tests' identical subtrees print (the t25
     # exchange-budget pin failed order-dependently on exactly this)
-    release_state(out)
+    release_state()
     n = len(rows)
     assert sorted(r.curriculum_pos for r in rows) == list(range(n))
     by_pos = sorted(rows, key=lambda r: r.curriculum_pos)
@@ -4964,7 +4949,6 @@ def test_longest_repeat_screened_search_matches_bruteforce(spark):
     span repeats cross-doc} — same value the full binary search found.
     Planted corpora cover best = 0, best < first level, best at a power
     of two, odd best between levels, and best = max_len."""
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.operators.textops import longest_repeat
 
     def mk(n_words: int) -> str:
@@ -4991,7 +4975,7 @@ def test_longest_repeat_screened_search_matches_bruteforce(spark):
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         lr = longest_repeat(docs)
         got = [(r.rep_len, r.n_docs) for r in lr.collect()]
-        release_state(lr)
+        release_state()
         if want == 0:
             assert got == [], (blk_len, got)
         else:
@@ -5006,7 +4990,6 @@ def test_media_near_dup_posting_pairs_match_selfjoin_semantics(spark):
     import itertools
     import random
 
-    from mrf_etl_spark.operators.dedup import release_state
     from mrf_etl_spark.operators.multimodal import media_near_dup
 
     rng = random.Random(5)
@@ -5018,7 +5001,7 @@ def test_media_near_dup_posting_pairs_match_selfjoin_semantics(spark):
     frames = spark.createDataFrame(rows, "doc_id long, frame_md5 string")
     out = media_near_dup(frames, threshold=0.3)
     got = {(r.doc_a, r.doc_b): round(r.jaccard, 9) for r in out.collect()}
-    release_state(out)
+    release_state()
     want = {}
     for a, b in itertools.combinations(sorted(docs), 2):
         c = len(docs[a] & docs[b])

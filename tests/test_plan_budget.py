@@ -113,8 +113,8 @@ BUDGETS = {
     # composed IVF-PQ (r11 map-side ADC): the per-row projection's
     # widen round-robins + candidate and final rank windows — probe
     # list, LUT MAP and rerank queries all broadcast; the former ADC
-    # posexplode + (query, neighbor) pivot exchange are GONE (§12,
-    # plans/r11/n7_ann_ivf_pq_{before,after}.txt)
+    # posexplode + (query, neighbor) pivot exchange are GONE (§12; plan
+    # capture: `python scripts/profile.py <outdir> after n7_ann_ivf_pq`)
     "n7_ann_ivf_pq": 7,
     # flat PQ-ADC (r11): codes-only projection + LUT map — one widen,
     # lutm agg, candidate + final rank windows; no corpus code window,
@@ -245,7 +245,8 @@ BUDGETS = {
     # its own copy of the KiB codebook collect (SinglePartition) and the
     # fixture widen (RoundRobin) instead of a ReusedExchange: more nodes,
     # strictly fewer corpus bytes moved (measured 3.7 -> 2.5 s noop at
-    # sf0.1, plans/r11/n14_ann_ivfpq_residual_{before,after}.txt)
+    # sf0.1; plan capture: `python scripts/profile.py <outdir> after
+    # n14_ann_ivfpq_residual`)
     "n14_ann_ivfpq_residual": 10,  # r11 §12: residual codes per-row, ADC map-side
 }
 
@@ -405,12 +406,12 @@ def test_pipe8_gate_runs_once_through_cache(spark):
     in-memory RDD leaf and the executed plan contains NO trace of the
     gate cascade (no parquet scan of eval_queries, no Bloom agg) —
     the gate ran before the plan was even built."""
-    from mrf_etl_spark.operators.dedup import release_state
+    from mrf_etl_spark.state import release_state
 
     df = _catalog()["pipe8_decontam_training_order"].spark_fn(spark, SF_DIR)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    release_state(df)
+    release_state()
     assert plan.count("Scan ExistingRDD") >= 2, plan[:2000]
     assert "eval_queries" not in plan, plan[:2000]
 

@@ -221,7 +221,8 @@ def test_connected_components_match_union_find(spark, edges):
     appearing in the pair list is labeled with the min id of its
     component, regardless of edge order, direction, self-loops, or
     duplicate pairs."""
-    from mrf_etl_spark.operators.dedup import connected_components, release_state
+    from mrf_etl_spark.operators.dedup import connected_components
+    from mrf_etl_spark.state import release_state
 
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     # cutoff=0 forces the distributed star-contraction path; the default
@@ -232,7 +233,7 @@ def test_connected_components_match_union_find(spark, edges):
     # site, e.g. test_connected_components_chain_and_canonical).
     comp = connected_components(df, driver_edge_cutoff=0)
     got = {r.doc_id: r.component_id for r in comp.collect()}
-    release_state(comp)
+    release_state()
 
     parent: dict[int, int] = {}
 
