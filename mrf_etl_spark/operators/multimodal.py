@@ -648,7 +648,7 @@ def banded_hamming_pairs(
     """THE banded-Hamming kernel for 64-bit signatures stored as two
     32-bit halves — shared by m6 (image aHash) and m7 (audio energy
     envelope) so the pigeonhole recipe can never drift between media
-    tiers (the cluster_map/assign_centroids_int8 single-kernel rule).
+    tiers (the single-kernel rule of similarity._with_centroid_int8).
     Adaptive ``max_hamming + 1`` disjoint bands (:func:`phash_band_spec`,
     complete at any threshold), df-capped band-equality candidates,
     exact bit_count(xor) verify. Input: (doc_id, hi, lo); output

@@ -22,6 +22,9 @@ columns on each join side; only the dot is evaluated per pair.
 
 from __future__ import annotations
 
+import itertools
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1552,6 +1555,62 @@ def embedding_outliers(
 # ------------------------------------------ k-means codebook training
 
 
+def _round_half_up(x: float) -> int:
+    """``F.round(x).cast("int")`` on the driver for a finite double:
+    Spark rounds HALF_UP (ties away from zero) on the double's exact
+    value. NumPy and the built-in ``round`` round half to even, which
+    moves every ±k.5 tie and breaks the oracle replay."""
+    return int(Decimal(x).to_integral_value(rounding=ROUND_HALF_UP))
+
+
+def _requantize_int8(s: list[int]) -> list[int]:
+    """:func:`quantize_int8`'s e1 recipe for one integer vector on the
+    driver: ``round(s_i / (amax / 127.0))`` rounded like Spark, zeros
+    when ``amax == 0``."""
+    amax = max((abs(float(v)) for v in s), default=0.0)
+    if amax == 0:
+        return [0] * len(s)
+    return [_round_half_up(float(v) / (amax / 127.0)) for v in s]
+
+
+def _kmeans_train(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    seed_mod: int,
+    iters: int,
+) -> list[tuple[int, list[int], int]]:
+    """:func:`kmeans_codebook`'s Lloyd loop; returns the trained codebook
+    as driver rows ``(cid, cvec, n_members)`` in ascending cid order."""
+    q = quantize_int8(emb, vec_col, id_col).select(
+        F.col(id_col).alias("vid"), "qvec"
+    )
+    book = sorted(
+        (r.vid, list(r.qvec), 0)
+        for r in q.filter((F.col("vid") % seed_mod) == 0).collect()
+    )
+    sums = [
+        F.sum(F.element_at("qvec", d + 1).cast("long")) for d in range(dim)
+    ]
+    for _ in range(iters):
+        upd = {
+            r[0]: r[1:]
+            for r in _with_centroid_int8(q, book)
+            .groupBy("cid")
+            .agg(F.count("*"), *sums)
+            .collect()
+        }
+        # empty clusters keep their previous centroid with 0 members
+        book = [
+            (cid, _requantize_int8(upd[cid][1:]), upd[cid][0])
+            if cid in upd
+            else (cid, cvec, 0)
+            for cid, cvec, _ in book
+        ]
+    return book
+
+
 def kmeans_codebook(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -1567,106 +1626,35 @@ def kmeans_codebook(
     this is the training step that replaces the stand-in).
 
     INTEGER-EXACT end-to-end so the oracle replays every assignment and
-    every trained centroid byte-for-byte (the e5 doctrine, extended to
-    an ITERATIVE algorithm):
+    every trained centroid byte-for-byte:
 
-    - vectors quantize to int8 first (e1's bit-replayable recipe);
-    - assignment score = dot(x, c) / sqrt(|c|²) with dot and |c|² exact
-      int64s — the two scalar IEEE ops (sqrt, divide) are correctly
-      rounded and therefore deterministic across engines, and |x| is
-      dropped entirely (constant per vector, argmax-invariant). Ties
-      break to the lowest centroid id; a zero centroid scores NULL and
-      ranks last — identical on both engines;
+    - vectors quantize to int8 first (e1's bit-replayable recipe); the
+      seeds are the vectors with ``vid % seed_mod == 0``;
+    - assignment is :func:`_with_centroid_int8` (argmax of
+      dot/sqrt(|c|²) from exact int64s, ties to the lowest cid, zero
+      centroids rank last);
     - update = per-dimension int64 SUM of the members (cosine is
       scale-invariant, so the un-divided sum IS the spherical mean
-      direction), then REQUANTIZED to int8 by e1's recipe. The
-      requantization is what makes the trainer scale-stable: every
-      dot/norm in every iteration stays ≤ 64·127², independent of
-      corpus size — no overflow cliff at any N, and the trained
-      codebook is already in the persisted index's int8 format;
+      direction), requantized to int8 by e1's recipe
+      ``round(s / (amax / 127.0))`` with Spark's HALF_UP rounding
+      (:func:`_requantize_int8`). The requantization keeps every dot/norm
+      ≤ dim·127² at any corpus size, and the trained codebook is
+      already in the persisted index's int8 format;
     - empty clusters keep their previous centroid (n_members = 0).
 
-    Plan shape per iteration (r11): one broadcast of the k-row codebook
-    onto the corpus scan, the argmax as a PER-ROW array fold
-    (:func:`_with_centroid_int8` — the previous shape paid a corpus
-    argmax exchange plus a vid-keyed join of the assignment back onto
-    the vectors), then one map-side-combinable 64-sum agg — the only
-    corpus exchange per iteration now carries k partial-sum rows per
-    task. Inter-iteration state is the k×dim int codebook, lazily
-    persisted (KiB): an EAGER localCheckpoint per iteration was
-    MEASURED 3x SLOWER end-to-end (e6 1.7 -> 5.3 s/run at sf0.1) —
-    each materialization is its own job and the per-job fixed cost
-    dwarfs the planning it saves; the lazy persist runs everything in
-    ONE job and the duplicated plan references read the cache.
+    The codebook lives on the driver (k·dim ints, KiB). Each iteration
+    is one distributed pass: the NumPy assignment and one
+    map-side-combinable (cid)-keyed agg of dim int64 sums and a count,
+    whose k result rows are collected and requantized on the driver.
+    Training therefore runs when this frame is built.
 
     Returns the trained codebook EXPLODED as
     (cid, n_members, i, cs): k·dim all-integer rows.
     """
-    q = quantize_int8(emb, vec_col, id_col).select(
-        F.col(id_col).alias("vid"), "qvec"
-    )
-    cent = state.persist(
-        q.filter((F.col("vid") % seed_mod) == 0).select(
-            F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
-        )
-    )
-    for _ in range(iters):
-        assigned = _with_centroid_int8(q, cent)
-        sums = (
-            assigned
-            .groupBy("cid")
-            .agg(
-                *[
-                    F.sum(F.element_at("qvec", d + 1).cast("long")).alias(f"_s{d}")
-                    for d in range(dim)
-                ],
-                F.count("*").alias("n_members"),
-            )
-            .select(
-                "cid",
-                F.array(*[F.col(f"_s{d}") for d in range(dim)]).alias("svec"),
-                "n_members",
-            )
-        )
-        amax = F.array_max(
-            F.transform("svec", lambda s: F.abs(s.cast("double")))
-        )
-        cq = F.when(
-            amax == 0, F.transform("svec", lambda s: F.lit(0))
-        ).otherwise(
-            F.transform(
-                "svec",
-                lambda s: F.round(
-                    s.cast("double") / (amax / F.lit(127.0))
-                ).cast("int"),
-            )
-        )
-        new = sums.select("cid", cq.alias("_ncv"), "n_members")
-        # keep-previous via ONE left join + coalesce (r11): the former
-        # unionByName(new, cent.anti_join(new)) referenced cent AND new
-        # twice each — 3 references to the prior iteration per round,
-        # 3^iters plan growth (q10's executed string printed 165
-        # exchanges and driver planning dominated, guide §7.3). The
-        # left-join form references cent twice and new once (2^iters);
-        # rows are identical: every assigned cid is one of cent's, so
-        # {new} ∪ {cent ∖ new} == cent LEFT JOIN new with coalesce.
-        # persist the k-row codebook between iterations: the next round
-        # references it through both the scoring broadcast and this
-        # join — unpersisted, every reference re-executes every earlier
-        # iteration's corpus aggs (measured 4x for iters=2 at sf0.1).
-        cent = state.persist(
-            cent.select("cid", "cvec")
-            .join(new, "cid", "left")
-            .select(
-                "cid",
-                F.coalesce("_ncv", "cvec").alias("cvec"),
-                F.coalesce("n_members", F.lit(0).cast("long")).alias(
-                    "n_members"
-                ),
-            ),
-        )
-    return cent.select(
-        "cid", "n_members", F.posexplode("cvec").alias("i", "cs")
+    book = _kmeans_train(emb, id_col, vec_col, dim, seed_mod, iters)
+    return emb.sparkSession.createDataFrame(
+        [(cid, n, i, cs) for cid, cvec, n in book for i, cs in enumerate(cvec)],
+        "cid bigint, n_members bigint, i int, cs int",
     )
 
 
@@ -1684,39 +1672,36 @@ def pq_codebook_train(
     quantizer: n5/n7/n8 encode against 16 seed vectors sliced per block
     ("a trained k-means codebook drops in unchanged" per pq_adc_topk's
     docstring — this trains it). All B blocks train in ONE pass: the
-    block id simply joins the Lloyd keys, so the plan is identical to
-    training one codebook, not B of them.
+    block id simply joins the Lloyd keys.
 
     INTEGER-EXACT end-to-end, one notch SIMPLER than e6's cosine case:
     vectors quantize to int8 on a corpus-GLOBAL scale
     (:func:`quantize_int8_global` — one uniform scaling preserves the
     L2 geometry distance-based training needs; e1's per-vector scale
     would distort it, and DID: a per-vector-trained codebook
-    reconstructed at recon_cos ≈ 0), the per-block distance is the
-    exact int64 ``Σ (x_i − c_i)²`` — argmin needs no division, no
-    sqrt, no rational trick; ties break to the lowest code id — and
-    the update
-    is the per-dim ROUNDED MEAN ``round(Σx_i / n)`` (exact int64 sum,
-    one correctly-rounded IEEE divide + the e1 round — deterministic on
-    both engines), which keeps every centroid inside int8 range at any
-    corpus size. Empty codes keep their previous centroid.
+    reconstructed at recon_cos ≈ 0). The seeds are the blocks of the
+    vectors with ``vid < n_codes``. The per-block argmin runs in NumPy
+    over exact int64 ``|c|² − 2·x·c`` (``Σ (x_i − c_i)²`` minus the
+    per-row constant |x|²): no division, no sqrt, codes in ascending
+    cid order and the first minimum wins, so ties break to the lowest
+    code id; rows whose block has no codes are dropped. The update is
+    the per-dim rounded mean ``round(Σx_i / n)`` (exact int64 sum, one
+    correctly-rounded IEEE divide, Spark's HALF_UP round via
+    :func:`_round_half_up`), which keeps every centroid inside int8
+    range at any corpus size. Empty codes keep their previous centroid
+    (n_members = 0).
 
-    Plan shape per iteration (r11): the B·k-row codebook collapses to a
-    1-row broadcast of structs, the argmin is a PER-ROW array fold over
-    the row's own block's codes — the previous shape paid a corpus×B
-    argmin exchange (groupBy(vid, b)) plus a (vid, b)-keyed join of the
-    assignment back onto the long form; both are gone — then the update
-    is one (block, code)-keyed sum agg whose exchange carries B·k
-    partial rows per task. Inter-iteration state persists lazily (KiB)
-    and the keep-previous step is a left join + coalesce — 2 plan
-    references per round instead of 3 (the kmeans_codebook lesson; an
-    eager checkpoint was measured slower, one job per round).
-    Assembling ``groupBy(cid)`` over the output in (b, i) order yields
-    the (cid, cv) seeds frame the PQ paths take.
+    As in :func:`kmeans_codebook` the B·k-row codebook lives on the
+    driver: each iteration is one distributed assign + (b, cid)-keyed
+    sum agg whose result rows are collected, so training runs when this
+    frame is built. Assembling ``groupBy(cid)`` over the output in
+    (b, i) order yields the (cid, cv) seeds frame the PQ paths take.
 
     Returns the trained sub-codebooks EXPLODED as
     (b, cid, n_members, i, cs): B·k·(dim/B) all-integer rows.
     """
+    from pyspark.sql import types as T
+
     size = dim // n_blocks
     q = quantize_int8_global(emb, vec_col, id_col).select(
         F.col(id_col).alias("vid"), "qvec"
@@ -1733,184 +1718,103 @@ def pq_codebook_train(
     x = q.select("vid", F.explode(blocks).alias("_k")).select(
         "vid", F.col("_k.b").alias("b"), F.col("_k.bq").alias("bq")
     )
-    cent = state.persist(
-        x.filter(F.col("vid") < n_codes).select(
-            "b", F.col("vid").alias("cid"), F.col("bq").alias("cq")
-        )
+    book = sorted(
+        (r.b, r.vid, list(r.bq), 0)
+        for r in x.filter(F.col("vid") < n_codes).collect()
     )
-    zero = F.lit(0).cast("long")
+    out_schema = T.StructType(
+        list(x.schema.fields) + [T.StructField("cid", T.LongType(), True)]
+    )
+    sums = [
+        F.sum(F.element_at("bq", i + 1).cast("long")) for i in range(size)
+    ]
+
+    def _assign(book):
+        import numpy as np
+
+        per_block = []  # (b, cids, codes^T, |c|²), codes in ascending cid
+        for b, codes in itertools.groupby(book, key=lambda r: r[0]):
+            codes = list(codes)
+            cmat = np.array([r[2] for r in codes], dtype=np.int64)
+            cids = np.array([r[1] for r in codes], dtype=np.int64)
+            per_block.append((b, cids, cmat.T, (cmat * cmat).sum(axis=1)))
+
+        def _batches(it):
+            for pdf in it:
+                n = len(pdf.index)
+                bs = pdf["b"].to_numpy()
+                xm = np.array(pdf["bq"].tolist(), dtype=np.int64)
+                cid = np.zeros(n, dtype=np.int64)
+                hit = np.zeros(n, dtype=bool)
+                for b, cids, cmat_t, c2 in per_block:
+                    m = bs == b
+                    if m.any():
+                        # |x - c|² - |x|², exact int64; argmin keeps the
+                        # first minimum, i.e. the lowest cid
+                        d = c2 - 2 * (xm[m] @ cmat_t)
+                        cid[m] = cids[np.argmin(d, axis=1)]
+                        hit |= m
+                yield pdf[hit].assign(cid=cid[hit])
+
+        return x.mapInPandas(_batches, out_schema)
+
     for _ in range(iters):
-        arr = cent.agg(
-            F.collect_list(F.struct("b", "cid", "cq")).alias("_cb")
-        )
-        mine = F.filter(
-            F.col("_cb"), lambda c: c["b"] == F.col("b")
-        )
-        scored = F.transform(
-            mine,
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("bq"),
-                        c["cq"],
-                        lambda a, cc: (a.cast("long") - cc.cast("long"))
-                        * (a.cast("long") - cc.cast("long")),
-                    ),
-                    zero,
-                    lambda acc, v: acc + v,
-                ).alias("d"),
-                c["cid"].alias("cid"),
-            ),
-        )
-        # same total struct order as the old min(struct(d, cid)) agg —
-        # d is an exact int64, never NULL/NaN, so no rank field needed
-        assigned = (
-            x.crossJoin(F.broadcast(arr))
-            .filter(F.size(mine) > 0)
-            .withColumn("cid", F.array_min(scored)["cid"])
-        )
-        sums = (
-            assigned
+        upd = {
+            (r[0], r[1]): r[2:]
+            for r in _assign(book)
             .groupBy("b", "cid")
-            .agg(
-                *[
-                    F.sum(F.element_at("bq", i + 1).cast("long")).alias(f"_s{i}")
-                    for i in range(size)
-                ],
-                F.count("*").alias("n_members"),
-            )
-        )
-        new = sums.select(
-            "b",
-            "cid",
-            F.array(
-                *[
-                    F.round(
-                        F.col(f"_s{i}").cast("double")
-                        / F.col("n_members").cast("double")
-                    ).cast("int")
-                    for i in range(size)
-                ]
-            ).alias("_ncq"),
-            "n_members",
-        )
-        # keep-previous via ONE left join + coalesce (2 plan references
-        # per round, not 3 — see kmeans_codebook); rows identical to
-        # unionByName(new, cent.anti_join(new)): every assigned (b, cid)
-        # is one of cent's. Lazy persist: one job, duplicated references
-        # read the cache.
-        cent = state.persist(
-            cent.select("b", "cid", "cq")
-            .join(new, ["b", "cid"], "left")
-            .select(
-                "b",
-                "cid",
-                F.coalesce("_ncq", "cq").alias("cq"),
-                F.coalesce("n_members", F.lit(0).cast("long")).alias(
-                    "n_members"
-                ),
-            ),
-        )
-    return cent.select(
-        "b", "cid", "n_members", F.posexplode("cq").alias("i", "cs")
+            .agg(F.count("*"), *sums)
+            .collect()
+        }
+        new = []
+        for b, cid, cq, _ in book:
+            n, *s = upd.get((b, cid), (0,))
+            if n:
+                cq = [_round_half_up(float(v) / float(n)) for v in s]
+            new.append((b, cid, cq, n))
+        book = new
+    return emb.sparkSession.createDataFrame(
+        [
+            (b, cid, n, i, cs)
+            for b, cid, cq, n in book
+            for i, cs in enumerate(cq)
+        ],
+        "b int, cid bigint, n_members bigint, i int, cs int",
     )
 
 
-def _with_centroid_int8(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """:func:`assign_centroids_int8`'s kernel keeping EVERY input column
-    (r11, guide §2.4): consumers that previously joined the (vid, cid)
-    output back onto their row set by vid (labels, snapshot flags, the
-    k-means update's qvec) read their columns directly instead — the
-    join and its corpus exchange disappear. Adds ``cid``."""
-    zero = F.lit(0).cast("long")
-    c = cent.withColumn(
-        "ns2",
-        F.aggregate(
-            F.transform("cvec", lambda s: s.cast("long") * s.cast("long")),
-            zero,
-            lambda acc, x: acc + x,
-        ),
-    )
-    arr = c.agg(F.collect_list(F.struct("cid", "cvec", "ns2")).alias("_cents"))
-    rows = q.crossJoin(F.broadcast(arr))
-    scored = F.transform(
-        F.col("_cents"),
-        lambda cc: F.struct(
-            F.when(
-                cc["ns2"] > 0,
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qvec"),
-                        cc["cvec"],
-                        lambda x, y: x.cast("long") * y.cast("long"),
-                    ),
-                    zero,
-                    lambda acc, x: acc + x,
-                ).cast("double")
-                / F.sqrt(cc["ns2"].cast("double")),
-            ).alias("score"),
-            cc["cid"].alias("cid"),
-        ),
-    )
+def _with_centroid_int8(q: DataFrame, book) -> DataFrame:
+    """THE int8 cosine assignment kernel: assign int8-quantized vectors
+    (``qvec``) to a driver-side codebook ``book`` — rows whose first two
+    fields are ``(cid, cvec)`` (k centroids × dim int8, KiB) — with one
+    exact int64 matmul per Arrow batch. Keeps every input column of
+    ``q`` and adds ``cid``, so consumers read their per-row columns
+    (labels, snapshot flags, the k-means update's qvec) without
+    joining the assignment back by id.
 
-    def _key(s: Column) -> Column:
-        rk = F.when(s["score"].isNull(), F.lit(1)).otherwise(F.lit(0))
-        neg = F.when(rk == F.lit(0), -s["score"]).otherwise(F.lit(0.0))
-        return F.struct(rk.alias("rk"), neg.alias("neg"), s["cid"].alias("cid"))
-
-    return (
-        rows.filter(F.size(F.col("_cents")) > 0)
-        .withColumn("cid", F.array_min(F.transform(scored, _key))["cid"])
-        .drop("_cents")
-    )
-
-
-def _with_centroid_int8_np(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """NumPy twin of :func:`_with_centroid_int8` for NON-ITERATIVE
-    callers holding a stable codebook (r12, guide §4.2): collect the
-    KiB (cid, cvec) codebook to the driver ONCE (k centroids × dim
-    int8 — metadata scale, the d17-probe/CC-fast-path precedent), then
-    assign whole Arrow batches with one int64 matmul instead of the
-    interpreted higher-order-function fold. The fold costs
-    ~k × 3·dim lambda-interpreter steps PER ROW (no codegen for
-    higher-order functions) — measured 24-29 s for ONE 18k-row × 207-
-    centroid assignment at sf1 on 32 cores; the matmul does the same
-    exact int64 arithmetic in ~0.1 s.
-
-    Bit-identical to the Catalyst kernel (pinned by
-    test_with_centroid_int8_np_matches_catalyst): dot and |c|² are
-    exact int64 (magnitudes ≤ dim·127² — far inside both int64 and the
-    2^53 double mantissa), score = double(dot)/sqrt(double(|c|²)) is
-    the same two correctly-rounded IEEE ops, ties break to the lowest
-    cid (centroids scanned in ascending-cid order, argmax keeps the
-    first max), zero-norm centroids rank last exactly like the NULL-
-    score struct key (rows fall to the lowest cid only when EVERY
-    centroid has zero norm). An empty codebook yields the empty frame
-    (the Catalyst form's ``filter(size > 0)``). Keeps every input
-    column; adds ``cid``.
-
-    NOT used by the iterative trainers (kmeans_codebook /
-    pq_codebook_train): their one-job lazy composition would turn into
-    a driver job per iteration (the eager-per-iteration shape r11
-    measured 3x slower at sf0.1). Their conversion — collect the k-row
-    codebook per iteration, literal centroids — is the documented
-    next step for trainer-at-scale."""
+    Exact replay of the oracle's argmax (``parity_llm._e6_iter_ctes``):
+    dot and |c|² are exact int64 (magnitudes ≤ dim·127² — far inside
+    both int64 and the 2^53 double mantissa), score =
+    double(dot)/sqrt(double(|c|²)) is two correctly-rounded IEEE ops,
+    ties break to the lowest cid (centroids scanned in ascending-cid
+    order, argmax keeps the first max), zero-norm centroids rank last
+    (rows fall to the lowest cid only when EVERY centroid has zero
+    norm). An empty codebook yields the empty frame."""
     from pyspark.sql import types as T
 
-    rows = cent.select("cid", "cvec").collect()
+    rows = sorted((r[0], list(r[1])) for r in book)
     out_schema = T.StructType(list(q.schema.fields) + [
         T.StructField("cid", T.LongType(), True)
     ])
     if not rows:
         return q.sparkSession.createDataFrame([], out_schema)
-    rows.sort(key=lambda r: r[0])
 
     def _batches(it):
         import numpy as np
         import pandas as pd
 
         cids = np.array([r[0] for r in rows], dtype=np.int64)
-        cmat = np.array([list(r[1]) for r in rows], dtype=np.int64)
+        cmat = np.array([r[1] for r in rows], dtype=np.int64)
         ns2 = (cmat * cmat).sum(axis=1)
         valid = ns2 > 0
         vcids = cids[valid]
@@ -1935,25 +1839,14 @@ def _with_centroid_int8_np(q: DataFrame, cent: DataFrame) -> DataFrame:
     return q.mapInPandas(_batches, out_schema)
 
 
-def assign_centroids_int8_np(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """:func:`assign_centroids_int8` through the NumPy kernel
-    (:func:`_with_centroid_int8_np`) — same (vid, cid) contract,
-    bit-identical assignments, for callers with a stable codebook."""
-    return _with_centroid_int8_np(q, cent).select("vid", "cid")
-
-
-def assign_centroids_int8(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """Exact-replay assignment of int8-quantized vectors (vid, qvec)
-    against an int8 codebook (cid, cvec): argmax of dot/sqrt(|c|²) from
-    exact int64s — e6/e8's shared kernel. Since r11 the argmax is a
-    per-row array-fold over a 1-row broadcast of the codebook (guide
-    §2.4): ZERO shuffles (the previous agg shape paid one corpus
-    exchange of N structs), so calling it per micro-batch costs
-    O(batch × codebook) map-side work only, and the groupBy("cid") the
-    st20/st23 sinks run next map-side-combines to |codebook| rows.
-    Scores are bit-identical (same int64 folds, same NULL-rank
-    ordering; `array_min` ≡ `min(struct)`). Returns (vid, cid)."""
-    return _with_centroid_int8(q, cent).select("vid", "cid")
+def assign_centroids_int8(q: DataFrame, book) -> DataFrame:
+    """(vid, cid) assignment of int8-quantized vectors (vid, qvec)
+    against a driver-side (cid, cvec) codebook: :func:`_with_centroid_int8`
+    projected to the ids, the form st20 calls. Zero shuffles, so
+    calling it per micro-batch costs O(batch × codebook) map-side work,
+    and the groupBy("cid") the st20 sink runs next map-side-combines to
+    |codebook| rows."""
+    return _with_centroid_int8(q, book).select("vid", "cid")
 
 
 def codebook_drift(
@@ -1988,10 +1881,10 @@ def codebook_drift(
     cross-multiplication makes 0-counts exact, no epsilon). Magnitudes
     bound at num·n·N ≤ num·N² — safe to N ~ 10^9 per snapshot.
 
-    Plan shape (r11): ONE broadcast of the codebook onto the tagged
-    scan, the argmax per-row (``is_cur`` rides the same rows —
-    the former shape joined the snapshot flag back onto the assignment
-    by vid, a corpus exchange pair), one (cid)-keyed count agg (the two
+    Plan shape: the KiB codebook is collected to the driver once and
+    :func:`_with_centroid_int8` assigns the tagged scan per Arrow batch
+    (``is_cur`` rides the same rows — no join of the snapshot flag back
+    onto the assignment by vid), one (cid)-keyed count agg (the two
     snapshot counts ride conditional sums in the SAME agg), and the two
     1-row totals attach as a broadcast crossJoin (the t5 global-scalar
     shape). One corpus-proportional exchange total.
@@ -2007,10 +1900,7 @@ def codebook_drift(
         F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
     )
     counts = (
-        # NumPy kernel (r12, §4.2): the drift monitor's codebook is a
-        # stable frame, so the assignment runs as one int64 matmul per
-        # Arrow batch instead of the interpreted per-row fold
-        _with_centroid_int8_np(q, cent)
+        _with_centroid_int8(q, cent.collect())
         .groupBy("cid")
         .agg(
             F.sum(F.when(~F.col("is_cur"), 1).otherwise(0)).cast("long").alias("n_base"),
@@ -3249,9 +3139,10 @@ def cluster_map(
     dominant label is the deterministic mode (count DESC, label ASC —
     the a17 rule). Every row of the report replays exactly.
 
-    Plan shape: e6's two training iterations (two corpus shuffles
-    each), then ONE more broadcast-assign pass + a (cid, label) count
-    agg that collapses map-side — the report table is k rows. At
+    Plan shape: e6's training iterations (one assign + sum-agg job each,
+    the codebook on the driver), then ONE more assign pass with the
+    trained codebook + a (cid, label) count agg that collapses map-side
+    — the report table is k rows. At
     100 TB nothing new shuffles the corpus beyond what training
     already does; the assignment output is the same (vid, cid) frame a
     persisted index would store anyway.
@@ -3261,17 +3152,11 @@ def cluster_map(
     assignment pass against the trained codebook — not the iteration-2
     update counts e6 reports).
     """
-    cb = kmeans_codebook(emb, id_col, vec_col, dim, seed_mod, iters)
-    cent = cb.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "cs"))), lambda s: s.cs
-        ).alias("cvec")
-    )
+    book = _kmeans_train(emb, id_col, vec_col, dim, seed_mod, iters)
     # ONE assignment kernel for the whole codebook family: the same
-    # shared argmax st20/st23 call, so batch and streaming assignments
-    # can never drift apart. The label rides the quantized rows (r11 —
-    # the former (vid, label) frame was joined back on by id, a corpus
-    # exchange pair for a per-row tag).
+    # argmax the trainer and st20/st23 call, so batch and streaming
+    # assignments can never drift apart. The label rides the quantized
+    # rows (no (vid, label) join back by id).
     q = quantize_int8(
         emb.withColumn("_lab", F.col(label_col).cast("long")),
         vec_col,
@@ -3279,10 +3164,7 @@ def cluster_map(
         keep=("_lab",),
     ).select(F.col(id_col).alias("vid"), "qvec", F.col("_lab").alias("label"))
     counts = (
-        # NumPy kernel (r12, §4.2): the trained codebook is frozen by
-        # this point — collecting it runs the trainer cascade once and
-        # the assignment becomes one int64 matmul per Arrow batch
-        _with_centroid_int8_np(q, cent.select("cid", "cvec"))
+        _with_centroid_int8(q, book)
         .groupBy("cid", "label")
         .agg(F.count("*").alias("n"))
     )

@@ -1733,11 +1733,13 @@ def _e6_iter_ctes(n: int, prev: int) -> str:
          FROM ux WHERE vid % {_E6_SEED_MOD} = 0),{_e6_iter_ctes(1, 0)},{_e6_iter_ctes(2, 1)}
        SELECT cid, nm AS n_members, i, cs FROM c2""",
     doc="e6: distributed spherical k-means codebook trainer (beyond-ref) "
-    "— Lloyd's iterations re-expressed as Spark aggregations: broadcast "
-    "the k-row codebook, map-side-combinable argmax assignment, "
-    "map-side-combinable per-dim int64 sums, e1-style int8 requantize "
-    "each round (keeps every product ≤ 64·127² at ANY corpus size — no "
-    "overflow cliff, and the output is already the persisted index's "
+    "— Lloyd's iterations as a driver loop over one distributed pass per "
+    "round: the NumPy int8 argmax against the driver-held k-row "
+    "codebook, a map-side-combinable per-dim int64 sum agg whose k rows "
+    "are collected, and an e1-style int8 requantize on the driver with "
+    "Spark's HALF_UP rounding (keeps every product ≤ 64·127² at ANY "
+    "corpus size — no overflow cliff, and the output is already the "
+    "persisted index's "
     "int8 codebook format). INTEGER-EXACT iterative training: the "
     "oracle unrolls both iterations and replays assignments and "
     "codebook bytes exactly (operators/similarity.kmeans_codebook). "
@@ -2417,8 +2419,9 @@ def _e7_iter_ctes(n: int, prev: int) -> str:
     "INTEGER-EXACT and simpler than e6's cosine case: corpus-GLOBAL "
     "int8 quantization (uniform scaling preserves L2 geometry — "
     "per-vector scaling measurably destroys it), exact int64 Σ(x−c)² "
-    "argmin (no division/sqrt/rational trick), rounded-mean update "
-    "keeps centroids in int8 at any corpus size, empty codes keep "
+    "argmin in NumPy (no division/sqrt/rational trick), HALF_UP "
+    "rounded-mean update on the driver keeps centroids in int8 at any "
+    "corpus size, empty codes keep "
     "their previous centroid. assemble_pq_seeds(scale=gscale) maps the "
     "trained bytes back to float space as the seeds frame the PQ "
     "paths take (operators/similarity.pq_codebook_train).",

@@ -1426,6 +1426,7 @@ def _register_st20():
                 F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
             )
         )
+        book = cent.collect()
 
         # base counts: the stored training-time artifact (one pass).
         # Quantization is per-row, so quantize the FILTERED base rows
@@ -1433,11 +1434,11 @@ def _register_st20():
         # and joined the base ids back on by vid: a corpus exchange
         # pair for a filter)
         base = (
-            sim.assign_centroids_int8_np(
+            sim.assign_centroids_int8(
                 sim.quantize_int8(emb.filter(F.col("label") != 0)).select(
                     F.col("vec_id").alias("vid"), "qvec"
                 ),
-                cent,
+                book,
             )
             .groupBy("cid")
             .agg(F.count("*").alias("n_base"))
@@ -1453,7 +1454,7 @@ def _register_st20():
                 F.col("vec_id").alias("vid"), "qvec"
             )
             counts = (
-                sim.assign_centroids_int8_np(qb, cent)
+                sim.assign_centroids_int8(qb, book)
                 .groupBy("cid")
                 .agg(F.count("*").alias("n"))
             )
@@ -1749,16 +1750,8 @@ def _register_st23():
         emb = t(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding", "label"
         )
-        cb = sim.kmeans_codebook(
+        book = sim._kmeans_train(
             emb, "vec_id", "embedding", DIM, seed_mod=_E6_SEED_MOD, iters=2
-        )
-        cent = state.persist(
-            cb.groupBy("cid").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "cs"))),
-                    lambda s: s.cs,
-                ).alias("cvec")
-            )
         )
 
         staging = _staged_halves(emb, f"st23/{sf_dir}", F.col("vec_id") % 2 == 0)
@@ -1772,7 +1765,7 @@ def _register_st23():
                 keep=("_lab",),
             ).select(F.col("vec_id").alias("vid"), "qvec", F.col("_lab").alias("label"))
             counts = (
-                sim._with_centroid_int8_np(qb, cent)
+                sim._with_centroid_int8(qb, book)
                 .groupBy("cid", "label")
                 .agg(F.count("*").alias("n"))
             )

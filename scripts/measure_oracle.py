@@ -11,8 +11,9 @@ import json
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 WORKER = r"""
 import json, resource, sys, time

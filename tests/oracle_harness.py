@@ -13,8 +13,9 @@ from __future__ import annotations
 import datetime as _dt
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def _norm_val(v):

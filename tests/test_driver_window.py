@@ -75,8 +75,7 @@ def test_window_capacity_headroom_for_next_round():
        probe of its family — oracle cost guideline ~0.35 s/probe, the
        ANN band's ≤~2.5 s being the accepted exception;
     2. when every family probe is at cap, split-and-rebalance by
-       measured cost (the r7/r8 mechanism: scripts/measure_oracle.py,
-       archived as scripts/probe_costs_r{N}.txt);
+       measured cost (the r7/r8 mechanism: scripts/measure_oracle.py);
     3. direct-row slots are freed by fusing sub-0.1 s direct oracles
        into family probes; ≥~0.5 s oracles stay direct (the cost floor).
 

@@ -5012,19 +5012,20 @@ def test_media_near_dup_posting_pairs_match_selfjoin_semantics(spark):
     assert got == want
 
 
-def test_with_centroid_int8_np_matches_catalyst(spark):
-    """r12 §4.2 pin: the NumPy assignment kernel (driver-collected
-    codebook + int64 matmul) must produce bit-identical cids to the
-    Catalyst array-fold kernel on random int8 inputs INCLUDING exact
-    score ties (duplicate centroids), zero-norm centroids (NULL-score
-    rank-last), an all-zero codebook (lowest cid wins), and an empty
-    codebook (empty result). Extra input columns must ride through."""
+def test_with_centroid_int8_matches_oracle_argmax(spark):
+    """The int8 assignment kernel (driver-side codebook + int64 matmul)
+    must pick the same cid as the oracle's own DuckDB argmax — the
+    ``a{n}`` CTE of ``parity_llm._e6_iter_ctes`` — on random int8 inputs
+    INCLUDING exact score ties (a duplicated centroid, a vector equal to
+    it, the zero vector), a zero-norm centroid (NULL score, ranks last),
+    an all-zero codebook (lowest cid wins) and an empty codebook (empty
+    result). Extra input columns ride through unchanged."""
     import random
 
-    from mrf_etl_spark.operators.similarity import (
-        _with_centroid_int8,
-        _with_centroid_int8_np,
-    )
+    import duckdb
+
+    from mrf_etl_spark.operators.similarity import _with_centroid_int8
+    from mrf_etl_spark.plans.parity_llm import _e6_iter_ctes
 
     rng = random.Random(17)
     dim = 8
@@ -5040,23 +5041,62 @@ def test_with_centroid_int8_np_matches_catalyst(spark):
     vecs.append((900, list(base_cents[0][1]), 0))
     vecs.append((901, [0] * dim, 1))  # zero vector: all dots 0, tie on cid
 
-    q = spark.createDataFrame(
-        vecs, "vid long, qvec array<int>, tag long"
+    q = spark.createDataFrame(vecs, "vid long, qvec array<int>, tag long")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ux (vid BIGINT, i INTEGER, qx BIGINT)")
+    con.executemany(
+        "INSERT INTO ux VALUES (?, ?, ?)",
+        [(v, i, x) for v, qv, _ in vecs for i, x in enumerate(qv)],
     )
     for cents in (base_cents, [(5, [0] * dim), (2, [0] * dim)], []):
-        cent = spark.createDataFrame(
-            cents or [(0, [0] * dim)], "cid long, cvec array<int>"
+        con.execute("CREATE OR REPLACE TABLE c0 (cid BIGINT, i INTEGER, cs INTEGER)")
+        if cents:
+            con.executemany(
+                "INSERT INTO c0 VALUES (?, ?, ?)",
+                [(c, i, x) for c, cv in cents for i, x in enumerate(cv)],
+            )
+        want = dict(
+            con.execute(
+                f"WITH {_e6_iter_ctes(1, 0)} SELECT vid, cid FROM a1"
+            ).fetchall()
         )
-        if not cents:
-            cent = cent.filter(F.lit(False))
-        want = {
-            (r.vid, r.tag): r.cid
-            for r in _with_centroid_int8(q, cent).collect()
-        }
-        got = {
-            (r.vid, r.tag): r.cid
-            for r in _with_centroid_int8_np(q, cent).collect()
-        }
+        out = _with_centroid_int8(q, cents).collect()
+        got = {r.vid: r.cid for r in out}
         assert got == want, (len(cents), {k: (got.get(k), want.get(k)) for k in set(got) ^ set(want) or list(got)[:3]})
-        if not cents:
-            assert got == {}
+        if cents:
+            # every input row comes back once, its columns unchanged
+            assert sorted((r.vid, list(r.qvec), r.tag) for r in out) == sorted(vecs)
+        else:
+            assert out == []
+
+
+def test_driver_requantization_rounds_like_spark(spark):
+    """The trainers requantize on the driver; every value must round
+    exactly like Spark's ``F.round(x).cast("int")`` (HALF_UP: ties away
+    from zero), not half to even like NumPy or the built-in ``round``.
+    Planted: ±k.5 ties, the doubles either side of a tie, an
+    ``amax == 0`` vector and an exact ±127 ratio; the e6 form is
+    checked against :func:`quantize_int8`, Spark's own e1 recipe."""
+    from mrf_etl_spark.operators.similarity import (
+        _requantize_int8,
+        _round_half_up,
+        quantize_int8,
+    )
+
+    xs = [0.5, -0.5, 1.5, -1.5, 2.5, -2.5, 126.5, -126.5, 0.0, -0.0,
+          0.49999999999999994, -0.49999999999999994, 2.5000000000000004,
+          2.4999999999999996, 127.0, -127.0]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    want = {r.i: r.r for r in df.select("i", F.round("x").cast("int").alias("r")).collect()}
+    assert {i: _round_half_up(x) for i, x in enumerate(xs)} == want
+
+    # e6: s / (amax / 127.0) with amax = 254 -> exact halves from odd s
+    svecs = [
+        [254, 1, 3, 5, -1, -5, 253, -253],
+        [0, 0, 0, 0, 0, 0, 0, 0],
+        [-127, 127, 0, 1, 2, 3, 4, 5],
+        [7, 1, 2, 3, 4, 5, 6, -7],
+    ]
+    emb = spark.createDataFrame(list(enumerate(svecs)), "vec_id int, embedding array<bigint>")
+    want = {r.vec_id: list(r.qvec) for r in quantize_int8(emb).collect()}
+    assert {i: _requantize_int8(s) for i, s in enumerate(svecs)} == want

@@ -126,16 +126,9 @@ NESTED_LOOP_OK = {
     # component, plus the 1-row deflation-state broadcast
     "e13_deflated_directions": "dim-sized direction broadcast per "
     "iteration (e12's shape, deflated second pass)",
-    # e6's Lloyd assignments cross the corpus with the bounded k-row
-    # codebook broadcast — n2's shape, once per iteration
-    "e6_kmeans_codebook": "bounded broadcast codebook (k rows/iteration)",
-    # e7's global quantization scale is a 1-row max-aggregate crossJoin
-    # (the t5 collect-free global-scalar shape); the codebook itself
-    # joins KEYED on the block id
-    "e7_pq_codebook_train": "1-row global-scale scalar broadcast",
-    # e8 assigns with e6's bounded codebook broadcast and attaches the
-    # two snapshot totals as a 1-row crossJoin (t5's global-scalar shape)
-    "e8_codebook_drift": "bounded codebook broadcast + 1-row totals",
+    # e8 attaches the two snapshot totals as a 1-row crossJoin (t5's
+    # global-scalar shape); its codebook is collected to the driver
+    "e8_codebook_drift": "1-row snapshot-totals broadcast",
     # t23's per-pass winning pair is a 1-row argmax crossJoined back
     # onto the vocab (t5's global-scalar shape), once per merge pass
     "t23_bpe_merges": "1-row winning-pair broadcast per merge pass",
@@ -158,9 +151,6 @@ NESTED_LOOP_OK = {
     "d15_dsir_select": "1-row token-totals scalar broadcast",
     # n10: ivf_topk's cascade — centroid set fixed-size and broadcast
     "n10_hard_negatives": "bounded broadcast centroid set",
-    # q10 composes e6's trainer (same k-row codebook broadcast) plus
-    # one more bounded broadcast-assign pass
-    "q10_cluster_map": "bounded broadcast codebook (e6's trainer inside)",
     # q11 composes d14's bounded eval-set broadcast (the n-gram gate
     # side is a zero-join bitset projection)
     "q11_dual_gate_decontam": "bounded broadcast eval set (d14's gate inside)",

@@ -341,48 +341,51 @@ def test_scd2_build_single_window_shuffle(spark):
 
 
 def test_e6_kmeans_codebook_persists_iteration_state(spark):
-    """e6's per-iteration k-row codebook must be persisted: the next
-    iteration references it three times (scoring broadcast, keep-previous
-    anti-join, final select), and without the cache every reference
-    re-executes every earlier iteration's corpus aggs (measured 4x for
-    iters=2 at sf0.1). The raw Exchange count of the textual plan is
-    meaningless here — cached subtrees print their full lineage — so the
-    pin is the cache itself: the final plan must read iteration state
-    through InMemoryTableScan, more than once."""
+    """e6's per-iteration k-row codebook must be kept, not recomputed:
+    each Lloyd iteration reads the previous codebook, and re-deriving it
+    per reference re-executes every earlier iteration's corpus aggs
+    (measured 4x for iters=2 at sf0.1). The codebook is KiB, so it is
+    kept on the driver: the returned frame must scan those driver rows and
+    read the corpus no more (no file scan, no exchange), and building
+    and collecting it must leave no cached plan or persisted RDD behind
+    — checked WITHOUT calling release_state."""
+    from mrf_etl_spark import state
     from mrf_etl_spark.operators.similarity import kmeans_codebook
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    plan = (
-        kmeans_codebook(emb, iters=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    before = state.held(spark)
+    book = kmeans_codebook(emb, iters=2)
+    plan = book._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Scan ExistingRDD|LocalTableScan", plan), plan[:2000]
+    assert "FileScan" not in plan and "Exchange" not in plan, plan[:2000]
+    assert book.collect()
+    assert state.held(spark) == before
 
 
 def test_e7_pq_codebook_persists_iteration_state(spark):
     """e7 inherits e6's iteration-state rule: the per-iteration B·k-row
-    codebook must be read back through InMemoryTableScan, not recomputed
-    per reference."""
+    codebook is kept on the driver between iterations, so the returned
+    frame scans driver rows and never replays a corpus pass, and
+    training leaves no Spark-side state behind."""
+    from mrf_etl_spark import state
     from mrf_etl_spark.operators.similarity import pq_codebook_train
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    plan = (
-        pq_codebook_train(emb, iters=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    before = state.held(spark)
+    book = pq_codebook_train(emb, iters=2)
+    plan = book._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Scan ExistingRDD|LocalTableScan", plan), plan[:2000]
+    assert "FileScan" not in plan and "Exchange" not in plan, plan[:2000]
+    assert book.collect()
+    assert state.held(spark) == before
 
 
 def test_bpe_plans_persist_pass_state(spark):
     """t23/t24 persist per-pass state (the winning pair and the merged
-    vocab) — the e6/e7 iteration-state rule: unpersisted, every later
-    pass re-executes all earlier passes' pair counts per reference.
-    As with e6, raw Exchange counts are meaningless under cached-subtree
-    printouts, so the pin is the InMemoryTableScan reuse itself."""
+    vocab): unpersisted, every later pass re-executes all earlier
+    passes' pair counts per reference. Raw Exchange counts are
+    meaningless under cached-subtree printouts, so the pin is the
+    InMemoryTableScan reuse itself."""
     from mrf_etl_spark.operators.textops import bpe_encode_fertility, bpe_merges
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -523,8 +523,9 @@ def test_aqe_skew_split_engages_on_zipf_fixture(spark, tmp_path):
     """
     import sys
     import time
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
     try:
         from make_scale_sf import write_zipf_events
     finally:
@@ -661,7 +662,7 @@ def test_concurrent_writers_plus_compaction_on_zipf_under_cluster_confs(
     import time as _time
     from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
     try:
         from make_scale_sf import write_zipf_events
     finally:
