@@ -32,13 +32,9 @@ from pyspark.sql.window import Window
 from mrf_etl_spark import state
 
 
-def _elem(col: str, i: int) -> Column:
-    # element_at is 1-based; embeddings are fixed-length arrays
-    return F.element_at(F.col(col), i + 1).cast("double")
-
-
-def dot_fold(a: str, b: str) -> Column:
-    """Left-associative fold dot product via zip_with+aggregate.
+def dot_fold(a: str | Column, b: str | Column) -> Column:
+    """Left-associative fold dot product via zip_with+aggregate, over
+    column names or column expressions (struct fields, slices).
 
     Bit-identical to the unrolled ``a[0]*b[0] + a[1]*b[1] + …`` SQL sum
     (the 0.0 seed is exact under IEEE addition), but the expression tree
@@ -128,7 +124,7 @@ def _with_centroid(
         F.col("_cents"),
         lambda cc: F.struct(
             (
-                _fold_dot(F.col(vec_col), cc["cvec"])
+                dot_fold(F.col(vec_col), cc["cvec"])
                 / (F.col("_vnorm") * cc["_cnorm"])
             ).alias("cos"),
             cc["cid"].alias("cid"),
@@ -301,7 +297,7 @@ def _with_topn_centroids(
         lambda cc: F.struct(
             (
                 -(
-                    _fold_dot(F.col(vec_col), cc["cvec"])
+                    dot_fold(F.col(vec_col), cc["cvec"])
                     / (F.col("_vnorm") * cc["_cnorm"])
                 )
             ).alias("neg"),
@@ -467,8 +463,9 @@ def quantize_int8_global(
 
     Deterministic cross-engine: max over doubles is order-invariant and
     exact, the divide and the half-away-from-zero round are single
-    correctly-rounded IEEE ops. The global max arrives as a 1-row
-    broadcast crossJoin (the t5 collect-free global-scalar shape).
+    correctly-rounded IEEE ops. The global max is computed once, when
+    this frame is built, and enters the projection as a literal, so
+    every later collect of the frame scans the corpus once.
     An all-zero corpus quantizes to zeros with scale 0.
 
     Returns (id, gscale, qvec) — ``gscale`` is the same value on every
@@ -476,30 +473,24 @@ def quantize_int8_global(
     space)."""
     from mrf_etl_spark.operators.dedup import widen_narrow_input
 
-    # every int8 trainer/assigner (e5/e6/e7 Lloyd crossJoins, st20/st23
-    # batch assignment) inherits its task width from THIS frame — a
-    # 1-2-split embeddings parquet would pin their whole fan-out on 1-2
-    # cores (the r11 sf10 straggler; no-op at real scale)
+    # every consumer (e7's Lloyd passes, n15, n16) inherits its task
+    # width from THIS frame — a 1-2-split embeddings parquet would pin
+    # their whole fan-out on 1-2 cores (the r11 sf10 straggler; no-op at
+    # real scale)
     emb = widen_narrow_input(emb)
     v = F.col(vec_col)
     gmax = emb.agg(
-        F.max(
-            F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-        ).alias("_gmax")
-    )
-    j = emb.crossJoin(F.broadcast(gmax))
-    scale = (F.col("_gmax") / F.lit(127.0)).alias("gscale")
-    q = F.when(
-        F.col("_gmax") == 0, F.transform(v, lambda x: F.lit(0))
-    ).otherwise(
+        F.max(F.array_max(F.transform(v, lambda x: F.abs(x.cast("double")))))
+    ).first()[0]
+    # an empty corpus has no max; its (empty) output needs no scale
+    gmax = F.lit(0.0 if gmax is None else gmax)
+    scale = (gmax / F.lit(127.0)).alias("gscale")
+    q = F.when(gmax == 0, F.transform(v, lambda x: F.lit(0))).otherwise(
         F.transform(
-            v,
-            lambda x: F.round(
-                x.cast("double") / (F.col("_gmax") / F.lit(127.0))
-            ).cast("int"),
+            v, lambda x: F.round(x.cast("double") / (gmax / F.lit(127.0))).cast("int")
         )
     )
-    return j.select(F.col(id_col), scale, q.alias("qvec"))
+    return emb.select(F.col(id_col), scale, q.alias("qvec"))
 
 
 # ------------------------------------------------ sign-random-projection LSH
@@ -668,13 +659,15 @@ def truncation_quality(
 
     Emits one row per (vector, k): (id, k, cos_retained). Prefix sums
     are left-associative over dims 1..k, so k's value is a strict prefix
-    of the full-norm accumulation — bit-identical across engines."""
+    of the full-norm accumulation — bit-identical across engines (the
+    fold's 0.0 seed is exact). Each prefix is a fold over a slice of the
+    squares, so the expression is O(|ks|), not O(|ks|·dim): unrolled
+    per-k sums exceed the JVM's 64 KB method limit and the stage then
+    runs without whole-stage codegen."""
+    sq = F.transform(vec_col, lambda x: x.cast("double") * x.cast("double"))
 
     def prefix2(k: int) -> Column:
-        s = _elem(vec_col, 0) * _elem(vec_col, 0)
-        for i in range(1, k):
-            s = s + _elem(vec_col, i) * _elem(vec_col, i)
-        return s
+        return F.aggregate(F.slice(sq, 1, k), F.lit(0.0), lambda acc, x: acc + x)
 
     full2 = prefix2(dim)
     per_k = F.array(
@@ -1965,6 +1958,46 @@ def _probe_rows(
     return quantize_int8(src, vec_col, id_col, keep=keep).select(*cols)
 
 
+def _int_dot(w: list[int]) -> Column:
+    """Exact int64 ``qvec · w`` against a driver-held integer vector,
+    which enters the plan as a literal ``array<bigint>``: a per-row fold,
+    no join."""
+    return F.aggregate(
+        F.zip_with(
+            "qvec",
+            F.lit(w).cast("array<bigint>"),
+            lambda x, wv: x.cast("long") * wv,
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _perceptron_train(
+    data: DataFrame, dim: int, iters: int
+) -> list[tuple[list[int], int]]:
+    """The e9/e10/e11 batch perceptron over (qvec, y) rows; returns
+    ``(w, n_mis)`` after each iteration: the weights after its update
+    and the number of rows it misclassified. From w₀ = 0, each
+    iteration is one corpus agg — the misclassified count and
+    ``Σ y·x_i`` over ``y·(w·x) ≤ 0`` — whose single row the driver adds
+    to w (NULL sums, when nothing is misclassified, add 0)."""
+    sums = [
+        F.sum(F.col("y") * F.element_at("qvec", i + 1).cast("long"))
+        for i in range(dim)
+    ]
+    w, out = [0] * dim, []
+    for _ in range(iters):
+        n_mis, *upd = (
+            data.filter(F.col("y") * _int_dot(w) <= 0)
+            .agg(F.count("*"), *sums)
+            .first()
+        )
+        w = [wi + (u or 0) for wi, u in zip(w, upd)]
+        out.append((w, n_mis))
+    return out
+
+
 def linear_probe(
     emb: DataFrame,
     label_expr: Column,
@@ -1991,64 +2024,25 @@ def linear_probe(
     classic perceptron warm start. |w_i| ≤ iters·N·127 keeps int64
     safe beyond 10¹² rows per iteration.
 
-    Plan shape per iteration: the 1-row weight vector broadcasts onto
-    the corpus scan (t5's global-scalar shape), the misclassified
-    filter is scan-local, the update is ONE combinable agg; the KiB of
-    weight state persists between iterations (the measured e6 rule).
+    As in :func:`kmeans_codebook` the dim-sized weight vector lives on
+    the driver (:func:`_perceptron_train`): each iteration is one scan
+    with the exact dot against the literal weights, a scan-local
+    misclassified filter and ONE combinable agg whose single row is
+    collected. Training therefore runs when this frame is built.
 
     Returns (iter, i, w, n_mis): the weight vector AFTER each
     iteration's update, with the update's misclassified count — k·dim
     all-integer rows.
     """
-    zero = F.lit(0).cast("long")
     data = _probe_rows(emb, label_expr, vec_col, id_col)
-    w = data.sparkSession.range(1).select(
-        F.array_repeat(zero, dim).alias("warr")
+    return emb.sparkSession.createDataFrame(
+        [
+            (k, i, wi, n_mis)
+            for k, (w, n_mis) in enumerate(_perceptron_train(data, dim, iters), 1)
+            for i, wi in enumerate(w)
+        ],
+        "iter int, i int, w bigint, n_mis bigint",
     )
-    outs = []
-    for k in range(1, iters + 1):
-        margin = F.col("y") * F.aggregate(
-            F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
-            zero,
-            lambda acc, v: acc + v,
-        )
-        mis = data.crossJoin(F.broadcast(w)).filter(margin <= 0)
-        upd = mis.agg(
-            *[
-                F.sum(F.col("y") * F.element_at("qvec", i + 1).cast("long")).alias(
-                    f"_u{i}"
-                )
-                for i in range(dim)
-            ],
-            F.count("*").alias("n_mis"),
-        )
-        w = state.persist(
-            w.crossJoin(F.broadcast(upd))
-            .select(
-                F.array(
-                    *[
-                        (
-                            F.element_at("warr", i + 1)
-                            + F.coalesce(F.col(f"_u{i}"), zero)
-                        ).alias(f"_w{i}")
-                        for i in range(dim)
-                    ]
-                ).alias("warr"),
-                F.col("n_mis"),
-            ),
-        )
-        outs.append(
-            w.select(
-                F.lit(k).alias("iter"),
-                F.posexplode("warr").alias("i", "w"),
-                F.col("n_mis"),
-            ).select("iter", "i", "w", "n_mis")
-        )
-        w = w.select("warr")
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
 
 
 def linear_probe_eval(
@@ -2063,92 +2057,37 @@ def linear_probe_eval(
     """Train/eval loop for the linear probe (e10) — :func:`linear_probe`
     trained on the NON-holdout rows, with each iteration's weights
     scored on the HELD-OUT split: the generalization report
-    (tp/fp/tn/fn) every classifier sign-off needs, produced in the same
-    plan as training. Ties at zero margin predict NEGATIVE (the
-    perceptron's own misclassification rule for y=+1 at margin 0 —
-    consistent on both engines as an integer comparison).
+    (tp/fp/tn/fn) every classifier sign-off needs. Ties at zero margin
+    predict NEGATIVE (the perceptron's own misclassification rule for
+    y=+1 at margin 0 — consistent on both engines as an integer
+    comparison).
 
     Everything stays integer-exact: training is e9's batch perceptron
     verbatim; evaluation is one conditional-sum agg over the holdout
-    per iteration against the broadcast weights.
+    per iteration against that iteration's literal weights, its single
+    row collected like the training rows. An empty holdout leaves the
+    confusion counts NULL and still reports the training count.
 
     Returns (iter, tp, fp, tn, fn, n_mis_train): iters all-int rows.
     """
-    zero = F.lit(0).cast("long")
     data = _probe_rows(emb, label_expr, vec_col, id_col, holdout_expr)
-    train = data.filter(~F.col("_ho"))
     hold = data.filter(F.col("_ho"))
-    w = data.sparkSession.range(1).select(
-        F.array_repeat(zero, dim).alias("warr")
-    )
-
-    def margin_col():
-        return F.col("y") * F.aggregate(
-            F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
-            zero,
-            lambda acc, v: acc + v,
-        )
-
-    outs = []
-    for k in range(1, iters + 1):
-        mis = train.crossJoin(F.broadcast(w)).filter(margin_col() <= 0)
-        upd = mis.agg(
+    rows = []
+    for k, (w, n_mis) in enumerate(
+        _perceptron_train(data.filter(~F.col("_ho")), dim, iters), 1
+    ):
+        pred_pos = _int_dot(w) > 0  # zero margin predicts negative
+        conf = hold.agg(  # tp, fp, tn, fn
             *[
-                F.sum(F.col("y") * F.element_at("qvec", i + 1).cast("long")).alias(
-                    f"_u{i}"
-                )
-                for i in range(dim)
-            ],
-            F.count("*").alias("n_mis_train"),
-        )
-        w = state.persist(
-            w.crossJoin(F.broadcast(upd))
-            .select(
-                F.array(
-                    *[
-                        (
-                            F.element_at("warr", i + 1)
-                            + F.coalesce(F.col(f"_u{i}"), zero)
-                        ).alias(f"_w{i}")
-                        for i in range(dim)
-                    ]
-                ).alias("warr"),
-                F.col("n_mis_train"),
-            ),
-        )
-        dot = F.aggregate(
-            F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
-            zero,
-            lambda acc, v: acc + v,
-        )
-        pred_pos = dot > 0  # zero margin predicts negative
-        conf = (
-            hold.crossJoin(F.broadcast(w))
-            .agg(
-                F.sum(
-                    F.when((F.col("y") == 1) & pred_pos, 1).otherwise(0)
-                ).cast("long").alias("tp"),
-                F.sum(
-                    F.when((F.col("y") == -1) & pred_pos, 1).otherwise(0)
-                ).cast("long").alias("fp"),
-                F.sum(
-                    F.when((F.col("y") == -1) & ~pred_pos, 1).otherwise(0)
-                ).cast("long").alias("tn"),
-                F.sum(
-                    F.when((F.col("y") == 1) & ~pred_pos, 1).otherwise(0)
-                ).cast("long").alias("fn"),
-                F.max("n_mis_train").alias("n_mis_train"),
-            )
-            .select(
-                F.lit(k).alias("iter"), "tp", "fp", "tn", "fn", "n_mis_train"
-            )
-        )
-        outs.append(conf)
-        w = w.select("warr")
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
+                F.sum(F.when((F.col("y") == y) & (pred_pos == p), 1).otherwise(0))
+                for y, p in ((1, True), (-1, True), (-1, False), (1, False))
+            ]
+        ).first()
+        rows.append((k, *conf, n_mis))
+    return emb.sparkSession.createDataFrame(
+        rows,
+        "iter int, tp bigint, fp bigint, tn bigint, fn bigint, n_mis_train bigint",
+    )
 
 
 def linear_probe_apply(
@@ -2169,63 +2108,21 @@ def linear_probe_apply(
 
     Training is :func:`linear_probe`'s batch perceptron verbatim
     (INTEGER-EXACT: int8 features, integer margins, one combinable
-    int64 update agg per iteration); inference is a single projection —
-    the final KiB weight vector broadcasts onto the corpus scan, the
-    score is the exact int64 dot, and ``keep = score > 0`` (zero margin
+    int64 update agg per iteration, weights on the driver); inference
+    is a single projection — the score is the exact int64 dot against
+    the final literal weights, and ``keep = score > 0`` (zero margin
     predicts negative, the perceptron's own rule, an integer compare on
     both engines). At 100 TB the scoring pass is embarrassingly
-    parallel: no shuffle after the bounded training aggs — the corpus
-    is read once and filtered in place.
+    parallel: no shuffle and no join — the corpus is read once and
+    scored in place.
 
     Returns (id, score, keep) for every input row — all-int + boolean,
     so the oracle replays every decision exactly.
     """
-    zero = F.lit(0).cast("long")
     data = _probe_rows(emb, label_expr, vec_col, id_col)
-    w = data.sparkSession.range(1).select(
-        F.array_repeat(zero, dim).alias("warr")
-    )
-    for _ in range(iters):
-        margin = F.col("y") * F.aggregate(
-            F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
-            zero,
-            lambda acc, v: acc + v,
-        )
-        mis = data.crossJoin(F.broadcast(w)).filter(margin <= 0)
-        upd = mis.agg(
-            *[
-                F.sum(F.col("y") * F.element_at("qvec", i + 1).cast("long")).alias(
-                    f"_u{i}"
-                )
-                for i in range(dim)
-            ]
-        )
-        w = state.persist(
-            w.crossJoin(F.broadcast(upd))
-            .select(
-                F.array(
-                    *[
-                        (
-                            F.element_at("warr", i + 1)
-                            + F.coalesce(F.col(f"_u{i}"), zero)
-                        ).alias(f"_w{i}")
-                        for i in range(dim)
-                    ]
-                ).alias("warr")
-            ),
-        )
-    score = F.aggregate(
-        F.zip_with("qvec", "warr", lambda x, wv: x.cast("long") * wv),
-        zero,
-        lambda acc, v: acc + v,
-    )
-    return (
-        data.crossJoin(F.broadcast(w))
-        .select(
-            F.col("vid").alias(id_col),
-            score.alias("score"),
-            (score > 0).alias("keep"),
-        )
+    score = _int_dot(_perceptron_train(data, dim, iters)[-1][0])
+    return data.select(
+        F.col("vid").alias(id_col), score.alias("score"), (score > 0).alias("keep")
     )
 
 
@@ -2398,18 +2295,6 @@ def _adc_dist(n_blocks: int, prefix: Column | None = None) -> Column:
     return dist
 
 
-def _fold_dot(a: Column, b: Column) -> Column:
-    """:func:`dot_fold` over column EXPRESSIONS (struct fields, slices)
-    instead of column names — the identical left-associative zip_with +
-    aggregate tree, so scalars computed through either spelling are
-    bit-identical."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pushdown_barrier(df: DataFrame) -> DataFrame:
     """Stop the optimizer from pushing predicates BELOW this point —
     guide §4.4's duplication problem, higher-order-function edition.
@@ -2519,7 +2404,7 @@ def _ivfpq_row_projection(
             F.col("_cents"),
             lambda c: F.struct(
                 (
-                    _fold_dot(F.col("cv"), c["cvec"]) / (F.col("cn") * c["cn"])
+                    dot_fold(F.col("cv"), c["cvec"]) / (F.col("cn") * c["cn"])
                 ).alias("cos"),
                 c["cid"].alias("cid"),
             ),
@@ -2566,7 +2451,7 @@ def _ivfpq_row_projection(
                                 + F.element_at(s["cn2"], b + 1)
                             )
                             - F.lit(2.0)
-                            * _fold_dot(
+                            * dot_fold(
                                 F.slice(F.col("cv"), b * size + 1, size),
                                 F.slice(s["cv"], b * size + 1, size),
                             )
@@ -3260,6 +3145,24 @@ def matryoshka_topk(
     )
 
 
+def _power_train(q: DataFrame, dim: int, iters: int) -> list[list[int]]:
+    """The e12/e13 power iteration over int8 rows (qvec); returns the
+    requantized direction after each iteration. From v₀ = 1⃗, each
+    iteration is one corpus agg of ``Σ (x·v)·x_i`` against the literal v,
+    whose single row the driver requantizes with e1's recipe
+    (:func:`_requantize_int8`, NULL sums of an empty corpus read as 0)."""
+    sums = [
+        F.sum(F.col("_d") * F.element_at("qvec", i + 1).cast("long"))
+        for i in range(dim)
+    ]
+    v, out = [1] * dim, []
+    for _ in range(iters):
+        s = q.withColumn("_d", _int_dot(v)).agg(*sums).first()
+        v = _requantize_int8([x or 0 for x in s])
+        out.append(v)
+    return out
+
+
 def deflated_directions(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -3280,98 +3183,39 @@ def deflated_directions(
     (int64), each row deflates as ``x' = x·n₁ − (x·v₁)·v₁`` — exact
     int64 products (|x·n₁| ≤ 127·64·127² ≈ 1.3e8, |(x·v₁)·v₁| same
     class), and EXACTLY orthogonal to v₁ in that arithmetic
-    (x'·v₁ = (x·v₁)n₁ − (x·v₁)n₁ = 0); the per-row e1-style int8
-    requantize then bounds the next component's products independent of
-    corpus size (it costs exact orthogonality a rounding ulp but keeps
-    every byte deterministic — what the oracle replay needs).
+    (x'·v₁ = (x·v₁)n₁ − (x·v₁)n₁ = 0); the per-row e1 int8 requantize
+    (:func:`quantize_int8` itself) then bounds the next component's
+    products independent of corpus size (it costs exact orthogonality a
+    rounding ulp but keeps every byte deterministic — what the oracle
+    replay needs).
 
-    Plan shape per component: iters × (dim-sized broadcast + one
-    combinable 64-sum agg), plus ONE map-side deflation projection
-    between components; KiB driver state throughout. Returns
-    (comp, i, v): the FINAL int8 direction per component,
-    n_components·dim all-integer rows."""
-    zero = F.lit(0).cast("long")
+    Each component is :func:`_power_train` (dim-sized driver state, one
+    combinable 64-sum agg per iteration); between components the
+    deflation is ONE map-side projection against the literal v₁ and n₁.
+    Training runs when this frame is built. Returns (comp, i, v): the
+    FINAL int8 direction per component, n_components·dim all-integer
+    rows."""
     q = quantize_int8(emb, vec_col, id_col).select(
         F.col(id_col).alias("vid"), "qvec"
     )
-
-    def _requant(arr):
-        amax = F.array_max(F.transform(arr, lambda s: F.abs(s.cast("double"))))
-        return F.when(
-            amax == 0, F.transform(arr, lambda s: zero)
-        ).otherwise(
-            F.transform(
-                arr,
-                lambda s: F.round(
-                    s.cast("double") / (amax / F.lit(127.0))
-                ).cast("long"),
-            )
-        )
-
-    def _iterate(corpus):
-        v = corpus.sparkSession.range(1).select(
-            F.array_repeat(F.lit(1).cast("long"), dim).alias("varr")
-        )
-        for _ in range(iters):
-            dot = F.aggregate(
-                F.zip_with("qvec", "varr", lambda x, vv: x.cast("long") * vv),
-                zero,
-                lambda acc, x: acc + x,
-            )
-            upd = (
-                corpus.crossJoin(F.broadcast(v))
-                .withColumn("_d", dot)
-                .agg(
-                    *[
-                        F.sum(
-                            F.col("_d")
-                            * F.element_at("qvec", i + 1).cast("long")
-                        ).alias(f"_s{i}")
-                        for i in range(dim)
-                    ]
-                )
-                .select(
-                    F.array(
-                        *[F.coalesce(F.col(f"_s{i}"), zero) for i in range(dim)]
-                    ).alias("sarr")
-                )
-            )
-            v = state.persist(upd.select(_requant(F.col("sarr")).alias("varr")))
-        return v
-
-    outs = []
-    corpus = q
+    rows = []
     for comp in range(1, n_components + 1):
-        v = _iterate(corpus)
-        outs.append(
-            v.select(
-                F.lit(comp).alias("comp"), F.posexplode("varr").alias("i", "v")
-            )
-        )
+        v = _power_train(q, dim, iters)[-1]
+        rows += [(comp, i, vi) for i, vi in enumerate(v)]
         if comp < n_components:
             # integer deflation against the component just found
-            n1 = F.aggregate(
-                F.transform("varr", lambda s: s * s), zero, lambda a, x: a + x
-            )
-            dotv = F.aggregate(
-                F.zip_with("qvec", "varr", lambda x, vv: x.cast("long") * vv),
-                zero,
-                lambda acc, x: acc + x,
-            )
+            n1 = F.lit(sum(vi * vi for vi in v)).cast("long")
             defl = F.zip_with(
                 "qvec",
-                "varr",
-                lambda x, vv: x.cast("long") * F.col("_n1") - F.col("_dv") * vv,
+                F.lit(v).cast("array<bigint>"),
+                lambda x, vv: x.cast("long") * n1 - F.col("_dv") * vv,
             )
-            corpus = (
-                corpus.crossJoin(F.broadcast(v.select("varr", n1.alias("_n1"))))
-                .withColumn("_dv", dotv)
-                .select("vid", _requant(defl).alias("qvec"))
-            )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
+            q = quantize_int8(
+                q.withColumn("_dv", _int_dot(v)).select("vid", defl.alias("_x")),
+                "_x",
+                "vid",
+            ).select("vid", "qvec")
+    return emb.sparkSession.createDataFrame(rows, "comp int, i int, v bigint")
 
 
 def power_iteration(
@@ -3398,61 +3242,23 @@ def power_iteration(
     update). From v₀ = 1⃗ the sign is pinned, so the oracle unrolls the
     iterations and replays every byte.
 
-    Plan shape per iteration: the dim-sized direction broadcasts onto
-    the corpus scan, the update is one combinable agg; KiB state
-    between iterations. Returns (iter, i, v): the int8 direction after
-    each iteration — iters·dim all-integer rows.
+    The direction lives on the driver (:func:`_power_train`): each
+    iteration is one scan with the exact dot against the literal v and
+    one combinable agg whose single row is collected and requantized,
+    so training runs when this frame is built. Returns (iter, i, v): the
+    int8 direction after each iteration — iters·dim all-integer rows.
     """
-    zero = F.lit(0).cast("long")
     q = quantize_int8(emb, vec_col, id_col).select(
         F.col(id_col).alias("vid"), "qvec"
     )
-    v = q.sparkSession.range(1).select(
-        F.array_repeat(F.lit(1).cast("long"), dim).alias("varr")
+    return emb.sparkSession.createDataFrame(
+        [
+            (k, i, vi)
+            for k, v in enumerate(_power_train(q, dim, iters), 1)
+            for i, vi in enumerate(v)
+        ],
+        "iter int, i int, v bigint",
     )
-    outs = []
-    for k in range(1, iters + 1):
-        dot = F.aggregate(
-            F.zip_with("qvec", "varr", lambda x, vv: x.cast("long") * vv),
-            zero,
-            lambda acc, x: acc + x,
-        )
-        upd = (
-            q.crossJoin(F.broadcast(v))
-            .withColumn("_d", dot)
-            .agg(
-                *[
-                    F.sum(
-                        F.col("_d") * F.element_at("qvec", i + 1).cast("long")
-                    ).alias(f"_s{i}")
-                    for i in range(dim)
-                ]
-            )
-            .select(
-                F.array(
-                    *[F.coalesce(F.col(f"_s{i}"), zero) for i in range(dim)]
-                ).alias("sarr")
-            )
-        )
-        amax = F.array_max(F.transform("sarr", lambda s: F.abs(s.cast("double"))))
-        vq = F.when(
-            amax == 0, F.transform("sarr", lambda s: zero)
-        ).otherwise(
-            F.transform(
-                "sarr",
-                lambda s: F.round(s.cast("double") / (amax / F.lit(127.0))).cast(
-                    "long"
-                ),
-            )
-        )
-        v = state.persist(upd.select(vq.alias("varr")))
-        outs.append(
-            v.select(F.lit(k).alias("iter"), F.posexplode("varr").alias("i", "v"))
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
 
 
 def dim_permutation(

@@ -625,36 +625,23 @@ def t6_pii_scrub(spark, sf_dir):
 # ------------------------------------------------------- similarity ops
 
 
-def _cos_sql(a: str, b: str) -> str:
-    """The oracle's 64-term unrolled cosine in SQL: the same left-associative
-    op order as ``similarity.dot_fold`` → bit-identical doubles."""
-    dot = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-    na = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-    nb = " + ".join(
-        f"CAST({b}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-    return f"(({dot}) / (sqrt({na}) * sqrt({nb})))"
-
-
-def _cos_sql_gated(a: str, b: str) -> str:
-    """:func:`_cos_sql` with the zero-norm case gated to NULL via
+def _cos_sql(a: str, b: str, d: int = DIM, gated: bool = False) -> str:
+    """The oracle's unrolled cosine over the first ``d`` dims in SQL: the
+    same left-associative op order as ``similarity.dot_fold`` →
+    bit-identical doubles. ``gated`` sends the zero-norm case to NULL via
     NULLIF on the denominator — matching the Spark side's explicit
     when(norms > 0) gate (Spark's 0/0 yields NULL, DuckDB's yields NaN;
     the gate makes both engines say NULL)."""
-    dot = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-    na = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-    nb = " + ".join(
-        f"CAST({b}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-    return f"(({dot}) / NULLIF(sqrt({na}) * sqrt({nb}), 0))"
+
+    def dot(x: str, y: str) -> str:
+        return " + ".join(
+            f"CAST({x}[{i}] AS DOUBLE) * CAST({y}[{i}] AS DOUBLE)"
+            for i in range(1, d + 1)
+        )
+
+    den = f"sqrt({dot(a, a)}) * sqrt({dot(b, b)})"
+    den = f"NULLIF({den}, 0)" if gated else f"({den})"
+    return f"(({dot(a, b)}) / {den})"
 
 
 @register(
@@ -899,25 +886,6 @@ _N11_DIM_T = 16
 _N11_CANDIDATES = 50
 
 
-def _cos_sql_trunc_gated(a: str, b: str, d: int) -> str:
-    """First-``d``-dims unrolled cosine with the zero-prefix case gated
-    to NULL (NULLIF denominator) — mirrors the Spark side's
-    when(norms > 0) gate on sliced arrays."""
-    dot = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, d + 1)
-    )
-    na = " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)"
-        for i in range(1, d + 1)
-    )
-    nb = " + ".join(
-        f"CAST({b}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, d + 1)
-    )
-    return f"(({dot}) / NULLIF(sqrt({na}) * sqrt({nb}), 0))"
-
-
 @register(
     "n11_ann_matryoshka",
     # shortlist by the 16-term truncated chain (NULLS LAST, id ties),
@@ -927,7 +895,7 @@ def _cos_sql_trunc_gated(a: str, b: str, d: int) -> str:
          FROM embeddings WHERE vec_id < 10),
        sc AS MATERIALIZED (
          SELECT q.query_id, e.vec_id AS neighbor_id,
-                {_cos_sql_trunc_gated('e.embedding', 'q.qv', _N11_DIM_T)}
+                {_cos_sql('e.embedding', 'q.qv', _N11_DIM_T, gated=True)}
                   AS cos_t
          FROM embeddings e, q WHERE e.vec_id <> q.query_id),
        short AS MATERIALIZED (
@@ -987,7 +955,7 @@ def n11_ann_matryoshka(spark, sf_dir):
            FROM cscored) WHERE rn = 1),
        pscored AS MATERIALIZED (
          SELECT e.vec_id, c.cid,
-                {_cos_sql_gated('e.embedding', 'c.cvec')} AS cs
+                {_cos_sql('e.embedding', 'c.cvec', gated=True)} AS cs
          FROM embeddings e CROSS JOIN cent c WHERE e.vec_id < 10),
        probes AS MATERIALIZED (
          SELECT vec_id AS query_id, cid FROM (
@@ -997,7 +965,7 @@ def n11_ann_matryoshka(spark, sf_dir):
            FROM pscored) WHERE rn <= 2),
        scored AS MATERIALIZED (
          SELECT p.query_id, e.vec_id AS neighbor_id,
-                {_cos_sql_gated('q.embedding', 'e.embedding')} AS cosine
+                {_cos_sql('q.embedding', 'e.embedding', gated=True)} AS cosine
          FROM probes p
          JOIN embeddings q ON q.vec_id = p.query_id
          JOIN assigned a ON a.cid = p.cid
@@ -1431,7 +1399,7 @@ def _register_q11():
               s.contaminated AS semantic_hit,
               (n.clean AND NOT s.contaminated) AS released
        FROM ng n JOIN sem s ON s.vec_id = n.doc_id""".replace(
-            "{COS}", _cos_sql_gated("c.embedding", "e.ev")
+            "{COS}", _cos_sql("c.embedding", "e.ev", gated=True)
         ),
         doc="q11 (beyond-ref): dual-gate decontamination report — the "
         "release audit materializing what d14's doc prescribes "
@@ -1878,9 +1846,10 @@ def _e9_iter_ctes(k: int, prev: int) -> str:
     "margin test y·(w·x) ≤ 0 is an integer comparison and the batch "
     "update w += Σ_misclassified y·x is ONE map-side-combinable int64 "
     "64-sum per iteration — order-invariant, so the oracle unrolls "
-    "both iterations and replays every weight byte. Per iteration: a "
-    "1-row weight broadcast on the corpus scan + one combinable agg; "
-    "KiB weight state persists between iterations. On the fixture the "
+    "both iterations and replays every weight byte. The dim-sized "
+    "weight vector lives on the driver: per iteration one corpus scan "
+    "with the exact dot against the literal weights + one combinable "
+    "agg whose single row is collected. On the fixture the "
     "probe is REAL: iteration-2 misclassifies 182/500 (the labels "
     "carry linear structure) (operators/similarity.linear_probe).",
 )
@@ -1954,7 +1923,8 @@ def _e10_iter_ctes(k: int, prev: int) -> str:
     doc="e10: probe train/eval loop (beyond-ref) — e9's batch perceptron "
     "trained on the 90% split, with each iteration's weights scored on "
     "the HELD-OUT 10%: the generalization report (tp/fp/tn/fn) every "
-    "classifier sign-off needs, in the same plan as training. "
+    "classifier sign-off needs. Driver-held weights as in e9; per "
+    "iteration one more agg scores the holdout against them. "
     "All-integer: exact margins, conditional-sum confusion counts; "
     "zero margin predicts negative (the perceptron's own rule). The "
     "fixture probe GENERALIZES — held-out accuracy 54% → 64% across "
@@ -2000,8 +1970,8 @@ def e10_probe_eval(spark, sf_dir):
     "production shape: train the quality probe (e9's batch perceptron "
     "verbatim, integer-exact), then score EVERY document with the "
     "final weights and emit the keep decision the pipeline filters on. "
-    "Inference is a single projection: the KiB weight vector "
-    "broadcasts onto the corpus scan, score = exact int64 dot, "
+    "Inference is a single projection: the driver-held weights enter "
+    "the corpus scan as a literal, score = exact int64 dot, "
     "keep = score > 0 (zero margin predicts negative). At 100 TB the "
     "scoring pass is shuffle-free — the corpus is read once and "
     "filtered in place. On the fixture 251/500 keep — both branches "
@@ -2061,7 +2031,8 @@ def _e12_iter_ctes(k: int, prev: int) -> str:
     "combinable 64-sum per iteration, e1-style int8 requantize keeps "
     "every product corpus-size-independent; v₀ = 1⃗ pins the sign, so "
     "the oracle unrolls both iterations and replays every byte. "
-    "Per iteration: a dim-sized broadcast + one agg — KiB state "
+    "The direction lives on the driver: per iteration one corpus agg "
+    "against the literal v, requantized on the driver "
     "(operators/similarity.power_iteration).",
 )
 def e12_power_iteration(spark, sf_dir):
@@ -2149,9 +2120,9 @@ def _e13_oracle() -> str:
     "iteration on the deflated corpus. The 'All-but-the-Top' "
     "D-component removal and the axes an embedding-whitening/drift "
     "dashboard tracks, computed on the engine — only dim-sized "
-    "directions leave an executor; per component iters × (KiB "
-    "broadcast + one combinable 64-sum), plus ONE map-side deflation "
-    "projection between components "
+    "directions leave an executor; per component e12's driver-side "
+    "loop (one combinable 64-sum per iteration), plus ONE map-side "
+    "deflation projection against the literal v1 between components "
     "(operators/similarity.deflated_directions).",
 )
 def e13_deflated_directions(spark, sf_dir):
@@ -2251,7 +2222,7 @@ def d15_dsir_select(spark, sf_dir):
                PARTITION BY vec_id
                ORDER BY cos_e DESC NULLS LAST, eval_id ASC) AS rn
              FROM sc)
-       WHERE rn = 1""".replace("{COS}", _cos_sql_gated("c.embedding", "e.ev")),
+       WHERE rn = 1""".replace("{COS}", _cos_sql("c.embedding", "e.ev", gated=True)),
     doc="d14: semantic eval-set decontamination (beyond-ref) — the "
     "embedding-level complement to d12's n-gram Bloom gate: flag "
     "corpus items whose nearest eval embedding exceeds τ=0.9 cosine, "

@@ -3303,6 +3303,38 @@ def test_linear_probe_eval_hand_case(spark):
     assert (out[2].tp, out[2].tn, out[2].n_mis_train) == (1, 1, 0)
 
 
+def test_linear_probe_eval_empty_holdout_reports_training(spark):
+    """With no held-out rows e10 trains on the whole corpus, so each
+    iteration's n_mis_train is e9's n_mis for the same labels; the
+    confusion counts are sums over nothing and stay NULL (the oracle's
+    c{k} CTE gives the same)."""
+    from mrf_etl_spark.operators.similarity import linear_probe, linear_probe_eval
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    label = F.col("label") < 5
+    n_mis = {r.iter: r.n_mis for r in linear_probe(emb, label).collect()}
+    out = linear_probe_eval(emb, label, F.lit(False)).collect()
+    assert {r.iter: r.n_mis_train for r in out} == n_mis
+    assert all((r.tp, r.fp, r.tn, r.fn) == (None,) * 4 for r in out)
+
+
+def test_truncation_quality_compiles_whole_stage(spark):
+    """e3's per-k prefix norms must fit the JVM's 64 KB method limit:
+    with the interpreted fallback disabled, a generated method that
+    grows past it fails the query instead of silently running the stage
+    without whole-stage codegen."""
+    from mrf_etl_spark.plans.parity import REGISTRY
+
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = REGISTRY["e3_truncation_quality"].spark_fn(
+            spark, "/root/testdata/sf0.001"
+        ).collect()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+    assert rows
+
+
 def test_linear_probe_apply_hand_case_and_agreement(spark):
     """e11 on the separable hand fixture: after training (w = the
     class-mean-difference direction, converged at iteration 2) every

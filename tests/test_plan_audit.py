@@ -71,9 +71,9 @@ NESTED_LOOP_OK = {
     "n14_ann_ivfpq_residual": "residual IVF-PQ: bounded centroid/seed/LUT broadcasts (the n7 pattern)",
     # n15 is n5's cascade in permuted coordinates: the same bounded
     # 16-seed codebook + 1-row query-table broadcasts, plus the 1-ROW
-    # permutation-array attach and the 1-row quantization-scale scalar
+    # permutation-array attach
     "n15_ann_pq_dimperm": "n5's bounded broadcasts + 1-row permutation "
-    "and scale attaches",
+    "attach",
     # n16: the k_proj-row sign-matrix broadcast crosses the corpus once
     # (map-side projection), the |Q|-row query-sketch broadcast crosses
     # the projected corpus (n1's bounded-query shape on 4x fewer bytes)
@@ -122,10 +122,6 @@ NESTED_LOOP_OK = {
     "(persisted codebooks) + constant-small tombstone anti-join",
     "n13_ann_ivfpq_reembed": "composes n2+n5's bounded broadcasts "
     "(persisted codebooks; re-embed is ingest-time state)",
-    # e13: e12's dim-sized direction broadcasts, once per iteration per
-    # component, plus the 1-row deflation-state broadcast
-    "e13_deflated_directions": "dim-sized direction broadcast per "
-    "iteration (e12's shape, deflated second pass)",
     # e8 attaches the two snapshot totals as a 1-row crossJoin (t5's
     # global-scalar shape); its codebook is collected to the driver
     "e8_codebook_drift": "1-row snapshot-totals broadcast",
@@ -139,13 +135,6 @@ NESTED_LOOP_OK = {
     # d14: eval sets are small at any corpus size — the bounded eval
     # broadcast IS the production decontamination plan (n1's shape)
     "d14_semantic_decontam": "bounded broadcast eval set",
-    # e9: the 1-row weight vector broadcasts onto the corpus scan per
-    # iteration (t5's global-scalar shape)
-    "e9_linear_probe": "1-row weight-vector broadcast per iteration",
-    "e10_probe_eval": "1-row weight-vector broadcast per iteration "
-    "(e9's trainer inside)",
-    "e11_probe_inference": "1-row weight-vector broadcast per iteration "
-    "(e9's trainer inside) + one final scoring broadcast",
     # d15: token totals (N_c, N_t) attach as a ONE-ROW broadcast
     # crossJoin (t5's collect-free global-scalar shape)
     "d15_dsir_select": "1-row token-totals scalar broadcast",
@@ -161,9 +150,6 @@ NESTED_LOOP_OK = {
     # n11: n1's shape — the bounded query set broadcasts onto the corpus
     # scan (at quarter cost via the truncated fold); rerank is keyed
     "n11_ann_matryoshka": "bounded broadcast query set (truncated-dim scan)",
-    # e12: the dim-sized direction broadcasts onto the corpus scan per
-    # iteration (e9's 1-row global-state shape)
-    "e12_power_iteration": "1-row direction broadcast per iteration",
     # bucket width derives from a ONE-ROW max-id (and max-weight)
     # aggregate crossJoined on (the t5 collect-free global-scalar shape)
     "sp21_token_stream_chunks": "1-row bucket-width scalar broadcast",

@@ -139,9 +139,9 @@ BUDGETS = {
     # canonical pick: the d3 pair cascade's exchanges; the argmax agg and
     # anti-join run over the pair-graph-bounded label set
     "d13_canonical_pick": 6,
-    # probe inference: e9's per-iteration update aggs + the final scoring
-    # join pair — the weight vector itself always broadcasts
-    "e11_probe_inference": 3,
+    # probe inference: the weights train on the driver, so the scoring
+    # pass is one shuffle-free projection of the corpus
+    "e11_probe_inference": 0,
     # DSIR: two word-count aggs + the scoring join + doc rollup; totals
     # broadcast, the budget cut is a bounded TakeOrdered (no shuffle)
     "d15_dsir_select": 4,
@@ -211,9 +211,6 @@ BUDGETS = {
     # agg, the cf⋈df join inputs, the domain rollup — all vocab-bounded
     # after the tokenize, plus the widen round-robin
     "t28_vocab_burstiness": 6,
-    # power iteration: one combinable update agg per iteration + the
-    # final explode — the direction itself always broadcasts
-    "e12_power_iteration": 3,
     # repeat ladder: widen repartition + (len,hash) window shuffle +
     # (doc,len) agg + per-doc agg — 4 real, printed twice through the
     # AdaptiveSparkPlan initial-plan section
@@ -340,44 +337,50 @@ def test_scd2_build_single_window_shuffle(spark):
     assert n <= 1, plan
 
 
-def test_e6_kmeans_codebook_persists_iteration_state(spark):
-    """e6's per-iteration k-row codebook must be kept, not recomputed:
-    each Lloyd iteration reads the previous codebook, and re-deriving it
-    per reference re-executes every earlier iteration's corpus aggs
-    (measured 4x for iters=2 at sf0.1). The codebook is KiB, so it is
-    kept on the driver: the returned frame must scan those driver rows and
-    read the corpus no more (no file scan, no exchange), and building
-    and collecting it must leave no cached plan or persisted RDD behind
-    — checked WITHOUT calling release_state."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "e6_kmeans_codebook",
+        "e7_pq_codebook_train",
+        "e9_linear_probe",
+        "e10_probe_eval",
+        "e12_power_iteration",
+        "e13_deflated_directions",
+    ],
+)
+def test_driver_side_trainer_holds_no_state(spark, name):
+    """The int-exact trainers keep their KiB iteration state (codebook,
+    weights, direction) on the driver, so each iteration reads the
+    previous one without re-deriving it (re-deriving re-executes every
+    earlier iteration's corpus aggs: measured 4x for e6 at iters=2,
+    sf0.1). The returned frame must scan those driver rows and read the
+    corpus no more (no file scan, no exchange), and building and
+    collecting it must leave no cached plan or persisted RDD behind —
+    checked WITHOUT calling release_state."""
     from mrf_etl_spark import state
-    from mrf_etl_spark.operators.similarity import kmeans_codebook
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     before = state.held(spark)
-    book = kmeans_codebook(emb, iters=2)
-    plan = book._jdf.queryExecution().executedPlan().toString()
+    df = _catalog()[name].spark_fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"Scan ExistingRDD|LocalTableScan", plan), plan[:2000]
     assert "FileScan" not in plan and "Exchange" not in plan, plan[:2000]
-    assert book.collect()
+    assert df.collect()
     assert state.held(spark) == before
 
 
-def test_e7_pq_codebook_persists_iteration_state(spark):
-    """e7 inherits e6's iteration-state rule: the per-iteration B·k-row
-    codebook is kept on the driver between iterations, so the returned
-    frame scans driver rows and never replays a corpus pass, and
-    training leaves no Spark-side state behind."""
-    from mrf_etl_spark import state
-    from mrf_etl_spark.operators.similarity import pq_codebook_train
+def test_global_int8_scale_is_a_literal(spark):
+    """quantize_int8_global computes the corpus max once, when the frame
+    is built: the frame itself reads the corpus once and joins nothing,
+    so a Lloyd loop that collects it per iteration (e7) scans the corpus
+    once per iteration, not twice."""
+    from mrf_etl_spark.operators.similarity import quantize_int8_global
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    before = state.held(spark)
-    book = pq_codebook_train(emb, iters=2)
-    plan = book._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"Scan ExistingRDD|LocalTableScan", plan), plan[:2000]
-    assert "FileScan" not in plan and "Exchange" not in plan, plan[:2000]
-    assert book.collect()
-    assert state.held(spark) == before
+    plan = (
+        quantize_int8_global(emb)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("FileScan") == 1, plan[:2000]
+    assert "Join" not in plan, plan[:2000]
 
 
 def test_bpe_plans_persist_pass_state(spark):
