@@ -648,65 +648,15 @@ def _cc_driver_local(raw: DataFrame) -> DataFrame:
     # ids) must not be forced through a long schema (min/ordering works
     # the same — union-by-min is lexicographic there)
     id_type = raw.schema[0].dataType.simpleString()
-    out = raw.sparkSession.createDataFrame(
+    return raw.sparkSession.createDataFrame(
         data, schema=f"doc_id {id_type}, component_id {id_type}"
     )
-    out._mrf_rounds = 0
-    return out
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-    driver_edge_cutoff: int = 200_000,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph → (doc_id,
-    component_id) where component_id is the MIN doc id reachable from the
-    node. The canonical-representative step every dedup pipeline needs:
-    near-dup similarity is not transitive, but keep-one-per-cluster is
-    defined on the transitive closure of the pair relation.
-
-    Alternating large-star / small-star contraction (the MapReduce CC
-    algorithm of Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — public literature):
-
-      * large-star: every node connects its LARGER neighbors to the
-        minimum of its neighborhood (incl. itself);
-      * small-star: every node connects its smaller neighbors and itself
-        to that minimum.
-
-    Each op is a groupBy + join (two shuffles/round) and the edge set
-    converges to stars centered at each component's minimum id in
-    O(log n) rounds — diameter-independent, unlike min-label propagation
-    whose round count equals the graph diameter (a 100-hop chain of
-    mutated near-dup copies took 100 shuffle rounds; star contraction
-    takes ~5). The driver-side work per round is one convergence check.
-
-    Deterministic regardless of iteration schedule (the fixpoint is the
-    per-component min), so the oracle replays it with a recursive-CTE
-    transitive closure. Only nodes appearing in ``pairs`` are labeled.
-    The returned frame carries ``_mrf_rounds`` (rounds to convergence)."""
-    # Materialize the (possibly expensive) upstream pair plan ONCE —
-    # nodes and edges both derive from this checkpoint. Deriving them
-    # independently from `pairs` ran the full upstream plan (e.g. a
-    # MinHash-LSH cascade) twice before the first contraction round.
-    raw = state.local_checkpoint(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    )
-    # Small-graph fast path (the broadcast-join analogy): a near-dup pair
-    # graph is typically ORDERS of magnitude smaller than the corpus —
-    # when it fits on the driver (two longs per edge; the default cutoff
-    # is ~3 MB collected), a local union-find replaces ~2 shuffle jobs
-    # per contraction round of pure scheduler overhead (measured: the CC
-    # tail of pipe2 at sf0.1 swung 2-10 s on job-scheduling noise alone).
-    # The label fixpoint is identical (component min). Graphs above the
-    # cutoff take the distributed star-contraction path below, which is
-    # the 100 TB story; both paths share one property-based test against
-    # a sequential union-find oracle.
-    if raw.count() <= driver_edge_cutoff:
-        return _cc_driver_local(raw)
+def _cc_star(raw: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """Distributed star contraction over a (u, v) edge frame — the
+    large-graph path of :func:`connected_components`. Returns the
+    (doc_id, component_id) labels and the number of rounds run."""
     nodes = state.persist(
         raw.select(F.col("u").alias("n"))
         .union(raw.select(F.col("v").alias("n")))
@@ -762,15 +712,65 @@ def connected_components(
     # min; the min-agg also keeps the label well-defined if max_iter cut
     # the loop short of convergence
     centers = edges.groupBy("u").agg(F.min("v").alias("component_id"))
-    out = (
-        nodes.join(centers.withColumnRenamed("u", "n"), "n", "left")
-        .select(
-            F.col("n").alias("doc_id"),
-            F.coalesce("component_id", F.col("n")).alias("component_id"),
-        )
+    labels = nodes.join(centers.withColumnRenamed("u", "n"), "n", "left").select(
+        F.col("n").alias("doc_id"),
+        F.coalesce("component_id", F.col("n")).alias("component_id"),
     )
-    out._mrf_rounds = rounds
-    return out
+    return labels, rounds
+
+
+def connected_components(
+    pairs: DataFrame,
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    max_iter: int = 25,
+    driver_edge_cutoff: int = 200_000,
+) -> DataFrame:
+    """Connected components over a near-dup pair graph → (doc_id,
+    component_id) where component_id is the MIN doc id reachable from the
+    node. The canonical-representative step every dedup pipeline needs:
+    near-dup similarity is not transitive, but keep-one-per-cluster is
+    defined on the transitive closure of the pair relation.
+
+    Alternating large-star / small-star contraction (the MapReduce CC
+    algorithm of Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC'14 — public literature):
+
+      * large-star: every node connects its LARGER neighbors to the
+        minimum of its neighborhood (incl. itself);
+      * small-star: every node connects its smaller neighbors and itself
+        to that minimum.
+
+    Each op is a groupBy + join (two shuffles/round) and the edge set
+    converges to stars centered at each component's minimum id in
+    O(log n) rounds — diameter-independent, unlike min-label propagation
+    whose round count equals the graph diameter (a 100-hop chain of
+    mutated near-dup copies took 100 shuffle rounds; star contraction
+    takes ~5). The driver-side work per round is one convergence check.
+
+    Deterministic regardless of iteration schedule (the fixpoint is the
+    per-component min), so the oracle replays it with a recursive-CTE
+    transitive closure. Only nodes appearing in ``pairs`` are labeled."""
+    # Materialize the (possibly expensive) upstream pair plan ONCE —
+    # nodes and edges both derive from this checkpoint. Deriving them
+    # independently from `pairs` ran the full upstream plan (e.g. a
+    # MinHash-LSH cascade) twice before the first contraction round.
+    raw = state.local_checkpoint(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    )
+    # Small-graph fast path (the broadcast-join analogy): a near-dup pair
+    # graph is typically ORDERS of magnitude smaller than the corpus —
+    # when it fits on the driver (two longs per edge; the default cutoff
+    # is ~3 MB collected), a local union-find replaces ~2 shuffle jobs
+    # per contraction round of pure scheduler overhead (measured: the CC
+    # tail of pipe2 at sf0.1 swung 2-10 s on job-scheduling noise alone).
+    # The label fixpoint is identical (component min). Graphs above the
+    # cutoff take the distributed star-contraction path (_cc_star), which
+    # is the 100 TB story; both paths share one property-based test against
+    # a sequential union-find oracle.
+    if raw.count() <= driver_edge_cutoff:
+        return _cc_driver_local(raw)
+    return _cc_star(raw, max_iter)[0]
 
 
 def keep_canonical(

@@ -2063,27 +2063,33 @@ def linear_probe_eval(
     comparison).
 
     Everything stays integer-exact: training is e9's batch perceptron
-    verbatim; evaluation is one conditional-sum agg over the holdout
-    per iteration against that iteration's literal weights, its single
-    row collected like the training rows. An empty holdout leaves the
-    confusion counts NULL and still reports the training count.
+    verbatim; evaluation is ONE conditional-sum agg over the holdout
+    that scores every iteration's literal weights at once (all of them
+    are on the driver when training ends), its single row collected
+    like the training rows. An empty holdout leaves the confusion
+    counts NULL and still reports the training count.
 
     Returns (iter, tp, fp, tn, fn, n_mis_train): iters all-int rows.
     """
     data = _probe_rows(emb, label_expr, vec_col, id_col, holdout_expr)
-    hold = data.filter(F.col("_ho"))
-    rows = []
-    for k, (w, n_mis) in enumerate(
-        _perceptron_train(data.filter(~F.col("_ho")), dim, iters), 1
-    ):
-        pred_pos = _int_dot(w) > 0  # zero margin predicts negative
-        conf = hold.agg(  # tp, fp, tn, fn
+    trained = _perceptron_train(data.filter(~F.col("_ho")), dim, iters)
+    # zero margin predicts negative
+    preds = [_int_dot(w) > 0 for w, _ in trained]
+    conf = (
+        data.filter(F.col("_ho"))
+        .agg(  # tp, fp, tn, fn per iteration
             *[
                 F.sum(F.when((F.col("y") == y) & (pred_pos == p), 1).otherwise(0))
+                for pred_pos in preds
                 for y, p in ((1, True), (-1, True), (-1, False), (1, False))
             ]
-        ).first()
-        rows.append((k, *conf, n_mis))
+        )
+        .first()
+    )
+    rows = [
+        (k, *conf[4 * k - 4 : 4 * k], n_mis)
+        for k, (_, n_mis) in enumerate(trained, 1)
+    ]
     return emb.sparkSession.createDataFrame(
         rows,
         "iter int, tp bigint, fp bigint, tn bigint, fn bigint, n_mis_train bigint",

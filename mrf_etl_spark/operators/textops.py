@@ -1723,6 +1723,77 @@ def _bpe_merge_step(arr_col, left_col, right_col):
     )
 
 
+def bpe_words(
+    docs: DataFrame, text_col: str = "text", *keep: ColumnOrName
+) -> DataFrame:
+    """(*keep, w): one row per whitespace word of ``text_col`` — the
+    split(lower(trim)) recipe every BPE entry (t23, t24, sp24, st22)
+    and its oracle share."""
+    return docs.select(
+        *keep,
+        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("w"),
+    )
+
+
+def bpe_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(w, n): the corpus word counts BPE trains on (the same pre-count
+    HF's tokenizers do before training)."""
+    return bpe_words(docs, text_col).groupBy("w").agg(F.count("*").alias("n"))
+
+
+def _bpe_encode(words: DataFrame, merges: list, *keep: str) -> DataFrame:
+    """(*keep, s): each word ``w`` as its space-joined BPE symbols after
+    ``merges`` — single characters (regexp '(.)' spacing, identical
+    per-codepoint semantics on both engines), then one
+    :func:`_bpe_merge_step` projection per learned rule, its pair as
+    literals."""
+    out = words.select(
+        *keep, F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("s")
+    )
+    for left, right, _ in merges:
+        out = out.select(
+            *keep,
+            _bpe_merge_step(F.split("s", " "), F.lit(left), F.lit(right)).alias("s"),
+        )
+    return out
+
+
+def _bpe_train(vocab: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
+    """Greedy BPE training over a (w, n) vocab: up to ``n_merges`` rules
+    ``(left, right, pair_n)`` in learning order. Each pass encodes the
+    vocab with the rules so far, counts adjacent symbol pairs weighted
+    by word count (a map-side-combinable agg) and takes the argmax
+    (count DESC, left ASC, right ASC) as a top-1 sort in Spark; only
+    that one row is collected. Training stops early when no adjacent
+    pair is left. The vocab is persisted for the passes (without it
+    every pass re-scans the corpus) and released before this returns."""
+    merges: list[tuple[str, str, int]] = []
+    with state.scope():
+        vocab = state.persist(vocab)
+        for _ in range(n_merges):
+            best = (
+                _bpe_encode(vocab, merges, "n")
+                .select(
+                    "n",
+                    F.explode(
+                        F.expr(
+                            "transform(slice(split(s, ' '), 1, "
+                            "size(split(s, ' ')) - 1), (x, i) -> "
+                            "struct(x AS l, element_at(split(s, ' '), i + 2) AS r))"
+                        )
+                    ).alias("_p"),
+                )
+                .groupBy("_p.l", "_p.r")
+                .agg(F.sum("n").alias("pair_n"))
+                .orderBy(F.desc("pair_n"), "l", "r")
+                .first()
+            )
+            if best is None:  # no adjacent pair left anywhere
+                break
+            merges.append((best.l, best.r, best.pair_n))
+    return merges
+
+
 def bpe_merges(
     docs: DataFrame,
     text_col: str = "text",
@@ -1735,91 +1806,44 @@ def bpe_merges(
     by word frequency, fuse the most frequent pair everywhere, repeat.
 
     Scale shape — the reason this distributes: ONE corpus-proportional
-    pass builds the (word, count) table (the same pre-count HF's
-    tokenizers do before training); every merge iteration after that is
-    VOCAB-sized — pair counting explodes distinct words' symbols (map-
-    side-combinable weighted agg), the winning pair is a 1-row argmax
-    attached back as a broadcast crossJoin (the t5 global-scalar shape,
-    no driver collect), and the merge itself is a per-row fold. A 100 TB
-    corpus trains at the cost of one word count + M vocab-sized passes.
+    pass builds the (word, count) table; every merge pass after that is
+    VOCAB-sized (:func:`_bpe_train`): the vocab is re-encoded with the
+    rules learned so far as literal per-row folds, the weighted pair
+    count is a map-side-combinable agg, and the 1-row argmax is the
+    only thing the driver collects. The merge table itself (``n_merges``
+    rows) lives on the driver, like the e6/e7 codebooks and e9–e13
+    weight vectors. A 100 TB corpus trains at the cost of one word count
+    + M vocab-sized passes.
 
     DETERMINISTIC/EXACT end-to-end: counts are int64; the argmax
-    tie-breaks (count DESC, left ASC, right ASC) via min(struct); the
-    greedy merge is a left-fold with exact string semantics the oracle
-    replays via DuckDB's list_reduce. Words come from the shared
-    split(lower(trim)) recipe; initial symbols are single characters
-    (regexp '(.)' spacing — identical per-codepoint semantics on both
-    engines).
+    tie-breaks (count DESC, left ASC, right ASC) in Spark, in the
+    oracle's own ORDER BY; the greedy merge is a left-fold with exact
+    string semantics the oracle replays via DuckDB's list_reduce. Words
+    come from :func:`bpe_words`.
 
     Returns the merge table: (step, left, right, pair_n), one row per
-    learned rule — the artifact a tokenizer ships.
+    learned rule — the artifact a tokenizer ships. A vocab that runs
+    out of adjacent pairs yields fewer than ``n_merges`` rows.
     """
-    words = (
-        docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
+    merges = _bpe_train(bpe_vocab(docs, text_col), n_merges)
+    return docs.sparkSession.createDataFrame(
+        [(k, *m) for k, m in enumerate(merges, 1)],
+        "step int, left string, right string, pair_n bigint",
     )
-    sym = words.select(
-        "n",
-        F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("s"),
+
+
+def bpe_word_tokens(docs: DataFrame, text_col: str, n_merges: int) -> DataFrame:
+    """(w, _chars, _toks): train ``n_merges`` rules on the corpus vocab
+    (:func:`_bpe_train`), then encode every vocab word with them in one
+    projection — the per-word table t24 and st22 join document words
+    against. Both counts are int64."""
+    vocab = bpe_vocab(docs, text_col)
+    merges = _bpe_train(vocab, n_merges)
+    return _bpe_encode(vocab, merges, "w").select(
+        "w",
+        F.length("w").cast("long").alias("_chars"),
+        F.size(F.split(F.col("s"), " ")).cast("long").alias("_toks"),
     )
-    out = []
-    for step_i in range(1, n_merges + 1):
-        arr = F.split(F.col("s"), " ")
-        pairs = sym.select(
-            "n",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(split(s, ' ')) < 2 THEN array() "
-                    "ELSE transform(slice(split(s, ' '), 1, "
-                    "size(split(s, ' ')) - 1), (x, i) -> "
-                    "struct(x AS l, element_at(split(s, ' '), i + 2) AS r)) "
-                    "END"
-                )
-            ).alias("_p"),
-        ).select("n", F.col("_p.l").alias("l"), F.col("_p.r").alias("r"))
-        cnt = pairs.groupBy("l", "r").agg(F.sum("n").alias("pair_n"))
-        # the 1-row winner is referenced TWICE (the output union and the
-        # next pass's merge broadcast) — persist it, like the e6/e7
-        # iteration codebooks, so each pass's pair count runs once
-        best = state.persist(
-            cnt.agg(
-                F.min(
-                    F.struct(
-                        (-F.col("pair_n")).alias("neg"),
-                        F.col("l").alias("l"),
-                        F.col("r").alias("r"),
-                    )
-                ).alias("_b")
-            ).select(
-                F.col("_b.l").alias("bl"),
-                F.col("_b.r").alias("br"),
-                (-F.col("_b.neg")).alias("pair_n"),
-            )
-        )
-        out.append(
-            best.select(
-                F.lit(step_i).alias("step"),
-                F.col("bl").alias("left"),
-                F.col("br").alias("right"),
-                F.col("pair_n"),
-            )
-        )
-        sym = state.persist(
-            sym.crossJoin(F.broadcast(best))
-            .select(
-                "n",
-                _bpe_merge_step(arr, F.col("bl"), F.col("br")).alias("s"),
-            ),
-        )
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionByName(o)
-    return res
 
 
 def bpe_encode_fertility(
@@ -1830,45 +1854,31 @@ def bpe_encode_fertility(
 ) -> DataFrame:
     """BPE encode + fertility report (t24) — the APPLY side of
     :func:`bpe_merges`: learn the merge table from the corpus (same
-    plan), encode every document with it, and report per-document
-    fertility — characters, token count BEFORE merges (= chars) and
-    AFTER, all exact int64 (the tokens-per-word compression number
-    tokenizer evaluations quote).
+    driver-side trainer), encode every document with it, and report
+    per-document fertility — characters, token count BEFORE merges
+    (= chars) and AFTER, all exact int64 (the tokens-per-word
+    compression number tokenizer evaluations quote).
 
     Scale shape: encoding goes through the VOCAB, not the corpus — the
-    per-word token counts are computed once on the distinct-word table
-    (where the merges already ran) and JOIN back to the exploded doc
-    words; the join key is the word (AQE-splittable hot stopwords),
-    the rollup is one doc-keyed agg. The corpus is never re-folded.
+    learned rules enter the plan as literals, the per-word token counts
+    are one projection over the distinct-word table
+    (:func:`bpe_word_tokens`) and JOIN back to the exploded doc words;
+    the join key is the word (AQE-splittable hot stopwords), the rollup
+    is one doc-keyed agg. The corpus is never re-folded and nothing
+    stays persisted.
 
     Returns (doc_id, n_words, n_chars, n_tokens) — docs with no words
     report zeros.
     """
-    w = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("w"),
-    )
-    vocab = w.groupBy("w").agg(F.count("*").alias("n"))
-    sym = vocab.select(
-        "w",
-        "n",
-        F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("s"),
-    )
-    merged = _apply_bpe_merges(sym, n_merges)
-    per_word = merged.select(
-        "w",
-        F.length("w").alias("_chars"),
-        F.size(F.split(F.col("s"), " ")).alias("_toks"),
-    )
+    per_word = bpe_word_tokens(docs, text_col, n_merges)
     agg = (
-        w.join(per_word, "w")
+        bpe_words(docs, text_col, F.col(id_col).alias("doc_id"))
+        .join(per_word, "w")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
-            F.sum(F.col("_chars").cast("long")).alias("n_chars"),
-            F.sum(F.col("_toks").cast("long")).alias("n_tokens"),
+            F.sum("_chars").alias("n_chars"),
+            F.sum("_toks").alias("n_tokens"),
         )
     )
     zero = F.lit(0).cast("long")
@@ -1882,50 +1892,6 @@ def bpe_encode_fertility(
             F.coalesce("n_tokens", zero).alias("n_tokens"),
         )
     )
-
-
-def _apply_bpe_merges(sym: DataFrame, n_merges: int) -> DataFrame:
-    """Run :func:`bpe_merges`' training loop over a (w, n, s) vocab
-    frame and return it with the FINAL symbol strings — the shared
-    train-then-encode core (t23 reports the merge table, t24 the
-    encoded vocab)."""
-    for _ in range(n_merges):
-        arr = F.split(F.col("s"), " ")
-        pairs = sym.select(
-            "n",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(split(s, ' ')) < 2 THEN array() "
-                    "ELSE transform(slice(split(s, ' '), 1, "
-                    "size(split(s, ' ')) - 1), (x, i) -> "
-                    "struct(x AS l, element_at(split(s, ' '), i + 2) AS r)) "
-                    "END"
-                )
-            ).alias("_p"),
-        ).select("n", F.col("_p.l").alias("l"), F.col("_p.r").alias("r"))
-        best = state.persist(
-            pairs.groupBy("l", "r")
-            .agg(F.sum("n").alias("pair_n"))
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("pair_n")).alias("neg"),
-                        F.col("l").alias("l"),
-                        F.col("r").alias("r"),
-                    )
-                ).alias("_b")
-            )
-            .select(F.col("_b.l").alias("bl"), F.col("_b.r").alias("br")),
-        )
-        sym = state.persist(
-            sym.crossJoin(F.broadcast(best))
-            .select(
-                "w",
-                "n",
-                _bpe_merge_step(arr, F.col("bl"), F.col("br")).alias("s"),
-            ),
-        )
-    return sym
 
 
 def dsir_select(

@@ -6778,12 +6778,15 @@ def _t23_iter_ctes(k: int, prev: int) -> str:
     "first 3 merge rules learned from the corpus, the loop inside every "
     "production tokenizer trainer. ONE corpus-proportional word count "
     "(the same pre-count HF tokenizers do), then every pass is "
-    "VOCAB-sized: map-side-combinable weighted pair counts, a 1-row "
-    "argmax broadcast back (no driver collect), and a per-row greedy "
-    "left-fold merge whose string semantics DuckDB's list_reduce "
-    "replays exactly. Deterministic ties (count DESC, left ASC, right "
-    "ASC); a fused symbol can chain as the next merge's LEFT within a "
-    "pass but never re-splits (operators/textops.bpe_merges).",
+    "VOCAB-sized: the vocab re-encoded with the rules so far as literal "
+    "per-row greedy left-fold merges (string semantics DuckDB's "
+    "list_reduce replays exactly), map-side-combinable weighted pair "
+    "counts, and a 1-row argmax in Spark — the only row the driver "
+    "collects; the merge table lives on the driver. Deterministic ties "
+    "(count DESC, left ASC, right ASC); a fused symbol can chain as the "
+    "next merge's LEFT within a pass but never re-splits; a vocab with "
+    "no adjacent pair left ends training early "
+    "(operators/textops.bpe_merges).",
 )
 def t23_bpe_merges(spark, sf_dir):
     return tx.bpe_merges(
@@ -6794,7 +6797,9 @@ def t23_bpe_merges(spark, sf_dir):
 def _t24_iter_ctes(k: int, prev: int) -> str:
     """t23's unrolled BPE pass with the WORD carried through each
     symbol table, so the final pass still maps word → encoded symbols
-    (t24 joins documents back through it)."""
+    (t24 joins documents back through it). The winner joins LEFT, so a
+    vocab with no adjacent pair left keeps its words unmerged (a NULL
+    pair never matches), as the engine does."""
     return f"""
        p{k} AS MATERIALIZED (
          SELECT l, r, CAST(sum(n) AS BIGINT) AS pair_n FROM (
@@ -6808,7 +6813,7 @@ def _t24_iter_ctes(k: int, prev: int) -> str:
          ORDER BY pair_n DESC, l ASC, r ASC LIMIT 1),
        s{k} AS MATERIALIZED (
          SELECT t.w, t.n, {_T23_MERGE_LAMBDA} AS s
-         FROM s{prev} t, b{k} b)"""
+         FROM s{prev} t LEFT JOIN b{k} b ON TRUE)"""
 
 
 @register(
@@ -6840,13 +6845,15 @@ def _t24_iter_ctes(k: int, prev: int) -> str:
               coalesce(a.n_tokens, 0) AS n_tokens
        FROM documents doc LEFT JOIN agg a USING (doc_id)""",
     doc="t24: BPE encode + fertility report (beyond-ref) — the APPLY "
-    "side of t23: learn the merge table in the same plan, encode every "
-    "document, report per-doc characters / whitespace words / BPE "
-    "tokens (the tokens-per-word compression number tokenizer evals "
-    "quote). Encoding goes through the VOCAB, never re-folds the "
-    "corpus: per-word token counts computed once on the distinct-word "
-    "table, joined back to the exploded doc words (hot stopwords = the "
-    "AQE skew case), one doc-keyed rollup. All-int64 exact surface "
+    "side of t23: learn the merge table with t23's driver-side trainer, "
+    "encode every document, report per-doc characters / whitespace "
+    "words / BPE tokens (the tokens-per-word compression number "
+    "tokenizer evals quote). Encoding goes through the VOCAB, never "
+    "re-folds the corpus: the learned rules enter the plan as literal "
+    "merge steps, per-word token counts are one projection over the "
+    "distinct-word table, joined back to the exploded doc words (hot "
+    "stopwords = the AQE skew case), one doc-keyed rollup; nothing "
+    "stays persisted. All-int64 exact surface "
     "(operators/textops.bpe_encode_fertility).",
 )
 def t24_bpe_encode_fertility(spark, sf_dir):

@@ -1619,9 +1619,10 @@ def _register_st22():
         "st22_stream_fertility",
         oracle=_ORACLE,
         doc="st22: streaming tokenizer-fertility monitor — t24's twin: "
-        "the BPE merge table trains ONCE on the corpus (the offline "
-        "tokenizer artifact, t23's loop frozen into a per-word token "
-        "table); documents then stream in micro-batches, each batch "
+        "the BPE merge table trains ONCE on the corpus with t23's "
+        "driver-side trainer (the offline tokenizer artifact), frozen "
+        "into a persisted per-word token table; documents then stream "
+        "in micro-batches, each batch "
         "encodes its words against the frozen vocab table and appends "
         "ONE additive (source, n_docs, n_words, n_chars, n_tokens) "
         "state row per source under the table lock; serving sums the "
@@ -1642,39 +1643,18 @@ def _register_st22():
             "doc_id", "source", "text"
         )
         # train the merge table on the FULL corpus (offline artifact),
-        # frozen as a per-word (w, chars, tokens) lookup
-        w_all = docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("w")
-        )
-        vocab = w_all.groupBy("w").agg(F.count("*").alias("n"))
-        sym = vocab.select(
-            "w",
-            "n",
-            F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("s"),
-        )
-        per_word = state.persist(
-            tx._apply_bpe_merges(sym, T23_MERGES).select(
-                "w",
-                F.length("w").cast("long").alias("_chars"),
-                F.size(F.split(F.col("s"), " ")).cast("long").alias("_toks"),
-            )
-        )
+        # frozen as a per-word (w, chars, tokens) lookup that every
+        # trigger joins against
+        per_word = state.persist(tx.bpe_word_tokens(docs, "text", T23_MERGES))
 
         staging = _staged_halves(docs, f"st22/{sf_dir}", F.col("doc_id") % 2 == 0)
         lake = _scratch("st22_fertility_lake")
         zero = F.lit(0).cast("long")
 
         def fold(batch_df, _batch_id):
-            bw = batch_df.select(
-                "source",
-                F.explode(
-                    F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-                ).alias("w"),
-            )
             wc = (
-                bw.join(per_word, "w")
+                tx.bpe_words(batch_df, "text", "source")
+                .join(per_word, "w")
                 .groupBy("source")
                 .agg(
                     F.count("*").alias("n_words"),

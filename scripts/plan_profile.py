@@ -10,9 +10,9 @@ For each named query (default: a built-in heavy set), at $SPARK_GRAFT_SF_DIR
     comparability,
   - print per-query: noop_s, pandas_s, n_exchanges, joins seen.
 
-Usage: python scripts/profile.py <outdir> [tag] [query ...]
+Usage: python scripts/plan_profile.py <outdir> [tag] [query ...]
 
-e.g. ``python scripts/profile.py plans/r13 before n7_ann_ivf_pq`` regenerates
+e.g. ``python scripts/plan_profile.py plans/r13 before n7_ann_ivf_pq`` regenerates
 one capture; captures are not committed.
 """
 

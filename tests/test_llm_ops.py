@@ -577,13 +577,13 @@ def test_connected_components_long_path_converges_logarithmically(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "doc_a long, doc_b long"
     )
-    # cutoff=0 forces the distributed star-contraction path (the default
+    # the distributed star-contraction path itself (connected_components
     # would solve this driver-sized graph with the local union-find)
-    comp = dd.connected_components(pairs, driver_edge_cutoff=0)
+    comp, rounds = dd._cc_star(pairs.selectExpr("doc_a AS u", "doc_b AS v"), 25)
     rows = comp.collect()
     assert len(rows) == 101
     assert all(r.component_id == 0 for r in rows)
-    assert 0 < comp._mrf_rounds <= 8
+    assert 0 < rounds <= 8
     release_state()
 
 
@@ -3143,6 +3143,43 @@ def test_bpe_encode_fertility_hand_case(spark):
     assert out[1] == (5, 3 + 5 + 6 + 3 + 3, 1 + 3 + 4 + 1 + 1)
     # doc 2: new(2) newer(4) newest(5) new(2)
     assert out[2] == (4, 3 + 5 + 6 + 3, 2 + 4 + 5 + 2)
+
+
+def test_bpe_exhausted_vocab_matches_oracles(spark):
+    """A vocab that runs out of adjacent pairs — every word one
+    character, or one word that is a single symbol after one merge: t23
+    reports only the rules it learned and t24 keeps each word's
+    unmerged symbols, both exactly as their DuckDB oracles do."""
+    import duckdb
+
+    from mrf_etl_spark.operators.textops import bpe_encode_fertility, bpe_merges
+    from mrf_etl_spark.plans.parity import REGISTRY
+    from mrf_etl_spark.plans.parity_llm import T23_MERGES
+
+    corpora = {
+        "single_chars": [(1, "a b c a"), (2, "b  c"), (3, "")],
+        "one_merge": [(1, "ab ab"), (2, "ab")],
+    }
+    expected = {
+        ("single_chars", "t23_bpe_merges"): [],
+        ("single_chars", "t24_bpe_encode_fertility"): [
+            (1, 4, 4, 4), (2, 2, 2, 2), (3, 1, 0, 1)
+        ],
+        ("one_merge", "t23_bpe_merges"): [(1, "a", "b", 3)],
+        ("one_merge", "t24_bpe_encode_fertility"): [(1, 2, 4, 2), (2, 1, 2, 1)],
+    }
+    for corpus, rows in corpora.items():
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        for name, fn in (
+            ("t23_bpe_merges", bpe_merges),
+            ("t24_bpe_encode_fertility", bpe_encode_fertility),
+        ):
+            got = sorted(map(tuple, fn(docs, n_merges=T23_MERGES).collect()), key=repr)
+            want = sorted(con.execute(REGISTRY[name].oracle).fetchall(), key=repr)
+            assert got == want == expected[corpus, name], (corpus, name, got, want)
 
 
 def test_ivf_pq_index_compact_preserves_queries(spark, tmp_path):

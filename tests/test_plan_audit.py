@@ -125,13 +125,6 @@ NESTED_LOOP_OK = {
     # e8 attaches the two snapshot totals as a 1-row crossJoin (t5's
     # global-scalar shape); its codebook is collected to the driver
     "e8_codebook_drift": "1-row snapshot-totals broadcast",
-    # t23's per-pass winning pair is a 1-row argmax crossJoined back
-    # onto the vocab (t5's global-scalar shape), once per merge pass
-    "t23_bpe_merges": "1-row winning-pair broadcast per merge pass",
-    "t24_bpe_encode_fertility": "1-row winning-pair broadcast per merge "
-    "pass (t23's trainer inside)",
-    "sp24_bpe_sequence_pack": "1-row winning-pair broadcast per merge "
-    "pass (t24's encoder feeding sp6's pack chain)",
     # d14: eval sets are small at any corpus size — the bounded eval
     # broadcast IS the production decontamination plan (n1's shape)
     "d14_semantic_decontam": "bounded broadcast eval set",

@@ -114,7 +114,7 @@ BUDGETS = {
     # widen round-robins + candidate and final rank windows — probe
     # list, LUT MAP and rerank queries all broadcast; the former ADC
     # posexplode + (query, neighbor) pivot exchange are GONE (§12; plan
-    # capture: `python scripts/profile.py <outdir> after n7_ann_ivf_pq`)
+    # capture: `python scripts/plan_profile.py <outdir> after n7_ann_ivf_pq`)
     "n7_ann_ivf_pq": 7,
     # flat PQ-ADC (r11): codes-only projection + LUT map — one widen,
     # lutm agg, candidate + final rank windows; no corpus code window,
@@ -242,7 +242,7 @@ BUDGETS = {
     # its own copy of the KiB codebook collect (SinglePartition) and the
     # fixture widen (RoundRobin) instead of a ReusedExchange: more nodes,
     # strictly fewer corpus bytes moved (measured 3.7 -> 2.5 s noop at
-    # sf0.1; plan capture: `python scripts/profile.py <outdir> after
+    # sf0.1; plan capture: `python scripts/plan_profile.py <outdir> after
     # n14_ann_ivfpq_residual`)
     "n14_ann_ivfpq_residual": 10,  # r11 §12: residual codes per-row, ADC map-side
 }
@@ -346,17 +346,18 @@ def test_scd2_build_single_window_shuffle(spark):
         "e10_probe_eval",
         "e12_power_iteration",
         "e13_deflated_directions",
+        "t23_bpe_merges",
     ],
 )
 def test_driver_side_trainer_holds_no_state(spark, name):
     """The int-exact trainers keep their KiB iteration state (codebook,
-    weights, direction) on the driver, so each iteration reads the
-    previous one without re-deriving it (re-deriving re-executes every
-    earlier iteration's corpus aggs: measured 4x for e6 at iters=2,
-    sf0.1). The returned frame must scan those driver rows and read the
-    corpus no more (no file scan, no exchange), and building and
-    collecting it must leave no cached plan or persisted RDD behind —
-    checked WITHOUT calling release_state."""
+    weights, direction, BPE merge table) on the driver, so each
+    iteration reads the previous one without re-deriving it
+    (re-deriving re-executes every earlier iteration's corpus aggs:
+    measured 4x for e6 at iters=2, sf0.1). The returned frame must scan
+    those driver rows and read the corpus no more (no file scan, no
+    exchange), and building and collecting it must leave no cached plan
+    or persisted RDD behind — checked WITHOUT calling release_state."""
     from mrf_etl_spark import state
 
     before = state.held(spark)
@@ -383,24 +384,22 @@ def test_global_int8_scale_is_a_literal(spark):
     assert "Join" not in plan, plan[:2000]
 
 
-def test_bpe_plans_persist_pass_state(spark):
-    """t23/t24 persist per-pass state (the winning pair and the merged
-    vocab): unpersisted, every later pass re-executes all earlier
-    passes' pair counts per reference. Raw Exchange counts are
-    meaningless under cached-subtree printouts, so the pin is the
-    InMemoryTableScan reuse itself."""
-    from mrf_etl_spark.operators.textops import bpe_encode_fertility, bpe_merges
+@pytest.mark.parametrize(
+    "name", ["t24_bpe_encode_fertility", "sp24_bpe_sequence_pack"]
+)
+def test_bpe_encode_plans_hold_no_state(spark, name):
+    """t24 and sp24 train the merge table on the driver and apply it as
+    literal merge steps over the vocab: the executed plan reads no
+    cached frame, and building and collecting it leaves no cached plan
+    or persisted RDD behind — checked WITHOUT calling release_state."""
+    from mrf_etl_spark import state
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p1 = bpe_merges(docs)._jdf.queryExecution().executedPlan().toString()
-    assert p1.count("InMemoryTableScan") >= 2, p1[:2000]
-    p2 = (
-        bpe_encode_fertility(docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert p2.count("InMemoryTableScan") >= 2, p2[:2000]
+    before = state.held(spark)
+    df = _catalog()[name].spark_fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan[:2000]
+    assert df.collect()
+    assert state.held(spark) == before
 
 
 def test_pipe8_gate_runs_once_through_cache(spark):
